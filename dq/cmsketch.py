@@ -42,12 +42,10 @@ CM_SALTS = [(1, 0), (1103515245, 12345), (69069, 362437), (214013, 2531011)]
 CM_PROBE_MIN_CNT = 50         # probe tokens: exact count at/above this
 
 
-def cm_position_cols(h: Column) -> list[Column]:
-    """The d row positions for a (already poly-hashed) token value."""
-    return [
-        (((h * F.lit(a) + F.lit(b)) % POLY_MOD) % CM_W).alias(f"_p{r}")
-        for r, (a, b) in enumerate(CM_SALTS)
-    ]
+def cm_positions(h: Column) -> Column:
+    """The d-element array of row positions h_r(x) for an (already
+    poly-hashed) token value; array index = row r."""
+    return F.array(*[((h * F.lit(a) + F.lit(b)) % POLY_MOD) % CM_W for a, b in CM_SALTS])
 
 
 def cm_sketch(tokens: DataFrame, token_col: str = "w") -> DataFrame:
@@ -60,11 +58,8 @@ def cm_sketch(tokens: DataFrame, token_col: str = "w") -> DataFrame:
     (r, pos) — uniform by construction, <= d*w result rows.
     """
     staged = tokens.select(token_hash(F.col(token_col)).alias("_h"))
-    arr = F.array(
-        *[((F.col("_h") * F.lit(a) + F.lit(b)) % POLY_MOD) % CM_W for a, b in CM_SALTS]
-    )
     return (
-        staged.select(F.posexplode(arr).alias("r", "pos"))
+        staged.select(F.posexplode(cm_positions(F.col("_h"))).alias("r", "pos"))
         .groupBy("r", "pos")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -81,10 +76,7 @@ def cm_estimates(sketch: DataFrame, probes: DataFrame, token_col: str = "w") -> 
     staged = probes.select(
         F.col(token_col).alias("token"), token_hash(F.col(token_col)).alias("_h")
     )
-    arr = F.array(
-        *[((F.col("_h") * F.lit(a) + F.lit(b)) % POLY_MOD) % CM_W for a, b in CM_SALTS]
-    )
-    fan = staged.select("token", F.posexplode(arr).alias("r", "pos"))
+    fan = staged.select("token", F.posexplode(cm_positions(F.col("_h"))).alias("r", "pos"))
     return (
         fan.join(F.broadcast(sketch), ["r", "pos"], "left")
         .groupBy("token")

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dq.skew import topk
+
 # ------------------------------------------------------------------ exact --
 
 
@@ -46,12 +48,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", key_col: str = "url") -> 
     """Keep one deterministic survivor per identical text: the minimal
     ``key_col`` (row_number over the fingerprint cluster — SURVEY.md §2.5)."""
     fp = fingerprint_col(F.col(text_col))
-    w = Window.partitionBy(fp).orderBy(F.col(key_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return topk(df, [fp], [F.col(key_col)], 1, "_rn").drop("_rn")
 
 
 def exact_dup_flag(text_col: str = "text", key_col: str = "url") -> Column:

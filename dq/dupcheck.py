@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dq.schema import DQ_DUPLICADOS
-
-CONSOLIDATE_KEYS = ["banco", "tabela", "dt_foto", "dt_processamento"]
+from dq.volumetry import merge_history
 
 
 def row_fingerprint(df: DataFrame, cols: list[str] | None = None) -> F.Column:
@@ -119,11 +118,9 @@ def dup_metric_row(
 
 def consolidate(history: DataFrame, aux: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """JuntaTabela merge: history rows not superseded by aux + aux, distinct
-    (≙ JuntaTabela.scala:31-87, with a real anti-join)."""
-    keys = keys or CONSOLIDATE_KEYS
-    cond = [history[k].eqNullSafe(aux[k]) for k in keys]
-    kept = history.join(F.broadcast(aux), cond, "left_anti")
-    return kept.unionByName(aux).dropDuplicates()
+    (≙ JuntaTabela.scala:31-87, with a real anti-join) — the same keyed
+    upsert as :func:`dq.volumetry.merge_history`, on the same four keys."""
+    return merge_history(history, aux, keys)
 
 
 def empty_history(spark: SparkSession) -> DataFrame:

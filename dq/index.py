@@ -13,27 +13,28 @@ row count otherwise).
 Scale shape (100 TB notes): an inverted index inherently shuffles the
 token->doc pairs — that exchange is the job. What must NOT happen is a hot
 term ("the": ~every doc) serializing through one task: the per-term top-K
-is the skew-proof two-phase rank (dq/sampling.py domain_cap_sample shape) —
-phase 1 ranks within (term, salt-of-doc_id) buckets and keeps K per bucket,
-so the single-task phase-2 window sees at most K * POSTINGS_SALT_BUCKETS
-rows per term regardless of df. The df/tf_total stats are a map-side-
-combinable hash-agg over the already-reduced (term, doc_id, tf) frame.
+is the shared dq.skew.topk, ranked on the (term, doc_id, tf) frame BEFORE
+any term-keyed join, so the term exchange sits between the map-side and
+the final WindowGroupLimit — a hot term reaches its reducer as <= K rows
+per input partition regardless of df (plan-pinned by the registry sweep).
+The df/tf_total stats are a map-side-combinable hash-agg over the same
+reduced frame.
 Output rows are flattened (term, rank) postings, not arrays — the driver
 gate's canonicalizer hashes scalars only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dq.dedup import tokens_col
+from dq.skew import topk
 
 # ---- shared constants (dq.oracles generates SQL from these) ----------------
 
 POSTINGS_K = 3             # postings kept per term
 POSTINGS_MIN_DF = 4        # vocabulary floor: term must appear in >= df docs
-POSTINGS_SALT_BUCKETS = 16 # phase-1 salt fan-out for hot terms
 
 # BM25 retrieval (bm25_topk); k1 = 6/5, b = 3/4 are baked into the integer
 # tf-normalization below — change them there, not here
@@ -69,37 +70,23 @@ def term_postings(
     text_col: str = "text",
     k: int = POSTINGS_K,
     min_df: int = POSTINGS_MIN_DF,
-    buckets: int = POSTINGS_SALT_BUCKETS,
 ) -> DataFrame:
     """(term, df_docs, tf_total, post_rank, doc_id, tf) capped postings.
 
     Ranking order is total: (tf DESC, doc_id ASC) — ties impossible, so the
-    two-phase rank is exactly ``row_number() OVER (PARTITION BY term ORDER
-    BY tf DESC, doc_id) <= k`` (the DuckDB twin) while no task ever holds
-    more than k * buckets rows of one term.
+    result is exactly ``row_number() OVER (PARTITION BY term ORDER BY tf
+    DESC, doc_id) <= k`` (the DuckDB twin). The rank runs on the narrow tf
+    frame before the stats join: ranking after a term-keyed join would
+    reuse that join's term partitioning, leaving no exchange for the
+    map-side cap to sit below. The df floor drops whole terms, so capping
+    first changes no row; df/tf_total attach to <= k rows per term.
     """
     tf = term_doc_tf(docs, id_col, text_col)
     stats = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("df_docs"),
         F.sum("tf").cast("bigint").alias("tf_total"),
     ).where(F.col("df_docs") >= min_df)
-    # rank on the NARROW (term, doc_id, tf) frame — the semi join only
-    # filters; df/tf_total attach after the cap, to <= k rows per term
-    w1 = Window.partitionBy("term", "_salt").orderBy(
-        F.col("tf").desc(), F.col("doc_id")
-    )
-    phase1 = (
-        tf.join(stats.select("term").hint("shuffle_hash"), "term", "left_semi")
-        .withColumn("_salt", (F.col("doc_id") % buckets).cast("int"))
-        .withColumn("_r1", F.row_number().over(w1))
-        .where(F.col("_r1") <= k)
-        .drop("_r1", "_salt")
-    )
-    w2 = Window.partitionBy("term").orderBy(F.col("tf").desc(), F.col("doc_id"))
-    ranked = (
-        phase1.withColumn("post_rank", F.row_number().over(w2).cast("int"))
-        .where(F.col("post_rank") <= k)
-    )
+    ranked = topk(tf, ["term"], [F.col("tf").desc(), F.col("doc_id")], k, "post_rank")
     return ranked.join(stats, "term").select(
         "term", "df_docs", "tf_total", "post_rank", "doc_id", "tf"
     )
@@ -111,7 +98,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = BM25_K,
-    buckets: int = POSTINGS_SALT_BUCKETS,
     scale: int = BM25_SCALE,
 ) -> DataFrame:
     """Integer-exact BM25 top-k retrieval (Robertson & Zaragoza 2009) for a
@@ -139,10 +125,9 @@ def bm25_topk(
     Scale shape (100 TB notes): the query-term filter lands BEFORE every
     join, so only matching postings (|q| terms * df docs) ever shuffle —
     the corpus-sized frames reduce to (term,doc,tf) and (doc,dl) hash-aggs
-    first. The global top-k is the skew-proof two-phase rank (the
-    term_postings shape): phase 1 caps per salt bucket, the single-task
-    phase-2 window sees <= k * buckets rows. Ties impossible: order is
-    (score DESC, doc_id).
+    first. The global top-k is the keyless dq.skew.topk, which plans as
+    TakeOrderedAndProject: each partition keeps its k best before the
+    single-partition merge. Ties impossible: order is (score DESC, doc_id).
     """
     tf = term_doc_tf(docs, id_col, text_col)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
@@ -168,18 +153,5 @@ def bm25_topk(
         F.count(F.lit(1)).cast("bigint").alias("n_terms_matched"),
         F.sum(contrib).cast("bigint").alias("score_micro"),
     )
-    w1 = Window.partitionBy("_salt").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id")
-    )
-    phase1 = (
-        s.withColumn("_salt", (F.col("doc_id") % buckets).cast("int"))
-        .withColumn("_r1", F.row_number().over(w1))
-        .where(F.col("_r1") <= k)
-        .drop("_r1", "_salt")
-    )
-    w2 = Window.orderBy(F.col("score_micro").desc(), F.col("doc_id"))
-    return (
-        phase1.withColumn("bm_rank", F.row_number().over(w2).cast("int"))
-        .where(F.col("bm_rank") <= k)
-        .select("bm_rank", "doc_id", "n_terms_matched", "score_micro")
-    )
+    ranked = topk(s, [], [F.col("score_micro").desc(), F.col("doc_id")], k, "bm_rank")
+    return ranked.select("bm_rank", "doc_id", "n_terms_matched", "score_micro")

@@ -1834,8 +1834,9 @@ FROM b GROUP BY band
 
 
 def _term_postings_sql() -> str:
-    """Twin of dq.index.term_postings: the engine's skew-proof two-phase
-    rank equals the plain row_number() <= k form (total order, no ties)."""
+    """Twin of dq.index.term_postings: the same plain row_number() <= k
+    rank (total order, no ties); the engine ranks before the df-floor join,
+    which drops whole terms, so the order of the two is immaterial."""
     from dq.index import POSTINGS_K, POSTINGS_MIN_DF
 
     return f"""
@@ -3358,8 +3359,8 @@ ORACLES["lm_doc_scores"] = _lm_doc_scores_sql()
 
 def _bm25_topk_sql() -> str:
     """Twin of dq.index.bm25_topk: same rational idf and cleared-fraction
-    tf normalization, plain row_number() top-k (the engine's two-phase rank
-    is order-identical — ties impossible on (score DESC, doc_id))."""
+    tf normalization, the same plain row_number() top-k (ties impossible on
+    (score DESC, doc_id))."""
     from dq.index import BM25_K, BM25_QUERY_TERMS, BM25_SCALE
 
     terms = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)

@@ -44,9 +44,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from dq.similarity import quantized_vec, sq_l2_unrolled
+from dq.skew import topk
 
 # ---- shared constants (dq.oracles generates SQL from these) ----------------
 
@@ -200,9 +200,5 @@ def pq_adc_topk(
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_d2")
-    )
+    ranked = topk(scored, ["query_id"], [F.col("adc_d2").asc(), F.col("neighbor_id")], k, "rank")
+    return ranked.select("query_id", "neighbor_id", "rank", "adc_d2")

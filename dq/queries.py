@@ -800,8 +800,8 @@ def temperature_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def domain_cap_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RefinedWeb-style domain balancing over the constructed URL corpus:
-    keep the DOMAIN_CAP_K smallest doc_ids per domain via the skew-proof
-    two-phase top-K (hot domains fan out over salt buckets in phase 1)."""
+    keep the DOMAIN_CAP_K smallest doc_ids per domain via the shared
+    dq.skew.topk (hot domains are capped map-side before the exchange)."""
     from dq import sampling, urlstats
 
     docs = _t(spark, sf_dir, "documents")
@@ -1995,8 +1995,8 @@ def snapshot_drift_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def term_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index build (dq.index): per term with df >= POSTINGS_MIN_DF,
     document frequency, total tf, and the top-POSTINGS_K postings by
-    (tf DESC, doc_id) — skew-proof two-phase rank so a hot term never
-    serializes through one task."""
+    (tf DESC, doc_id) — the map-side-capped dq.skew.topk, so a hot term
+    never serializes through one task."""
     from dq.index import term_postings as postings
 
     return postings(_t(spark, sf_dir, "documents"))
@@ -2492,6 +2492,7 @@ def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     window sees only those rows, never the corpus. Integers end-to-end:
     purity_bp = (10000 * top_n) DIV n_members, positive, DIV == //."""
     from dq.clustering import kmeans_assign
+    from dq.skew import topk
 
     emb = _t(spark, sf_dir, "embeddings")
     asg = kmeans_assign(emb, dim=EMB_DIM)
@@ -2500,12 +2501,9 @@ def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cluster_id", "label")
         .agg(F.count(F.lit(1)).alias("n_lab"))
     )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("n_lab").desc(), F.col("label").asc()
-    )
+    order = [F.col("n_lab").desc(), F.col("label").asc()]
     top = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        topk(counts, ["cluster_id"], order, 1, "rn")
         .select(
             "cluster_id",
             F.col("label").cast("bigint").alias("top_label"),
@@ -2638,8 +2636,8 @@ def domain_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-exact BM25 top-k retrieval (dq.index.bm25_topk) for the
     fixed BM25_QUERY_TERMS set over documents — rational idf + cleared-
-    fraction tf normalization so the twin is bit-identical; skew-proof
-    two-phase global rank."""
+    fraction tf normalization so the twin is bit-identical; keyless
+    dq.skew.topk (TakeOrderedAndProject)."""
     from dq.index import bm25_topk as bm25
 
     return bm25(_t(spark, sf_dir, "documents"))

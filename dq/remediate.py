@@ -124,8 +124,9 @@ def flip_status_all(
     spark: SparkSession, failures: DataFrame, fs: list[Failure]
 ) -> DataFrame:
     """Status flip 0->1 for a BATCH of healed failures (≙ CorrigirBuraco.
-    scala:172-215): one anti-join on (banco, tabela, dt_foto) + one union of
-    the status=1 rows — plan depth is constant in the number of failures."""
+    scala:172-215): the :func:`dq.volumetry.merge_history` upsert keyed on
+    (banco, tabela, dt_foto) — one anti-join + one union of the status=1
+    rows, so plan depth is constant in the number of failures."""
     fixed = spark.createDataFrame(
         [
             (f.banco, f.tabela, f.dt_foto, f.var_nome_campo, f.var_formato_dt_foto, 1)
@@ -133,10 +134,7 @@ def flip_status_all(
         ],
         schema=DQ_FAILURES,
     )
-    keys = ["banco", "tabela", "dt_foto"]
-    cond = [failures[k].eqNullSafe(fixed[k]) for k in keys]
-    kept = failures.join(F.broadcast(fixed), cond, "left_anti")
-    return kept.unionByName(fixed).dropDuplicates()
+    return volumetry.merge_history(failures, fixed, keys=["banco", "tabela", "dt_foto"])
 
 
 def flip_status(spark: SparkSession, failures: DataFrame, f: Failure) -> DataFrame:

@@ -19,17 +19,14 @@ Scale shapes (100 TB notes):
 - hash_sample / stratified_sample are pure codegen filters: ZERO exchanges
   (plan-asserted); the hash is derived from the key column so resume and
   retry re-derive identical samples.
-- domain_cap_sample is the two-phase top-K: phase 1 ranks within
-  (domain, salt(doc_id)) — a hot domain fans out over ``buckets`` reducers
-  and every global-top-K row survives its bucket (the K smallest of the
-  domain are each among the K smallest of their own bucket); phase 2 ranks
-  the <= K*buckets survivors per domain — reducer volume bounded by
-  K*buckets rows per domain regardless of domain size. Never a raw
-  window over the unbounded domain partition.
+- domain_cap_sample is the shared per-key top-K (dq.skew.topk): the
+  optimizer caps each input partition at K rows per domain BEFORE the
+  domain exchange (map-side WindowGroupLimit), so a hot domain reaches its
+  reducer as <= K rows per input partition regardless of domain size.
 - token_budget_packing is a two-level distributed scan: range-bucket by
   doc_id, per-bucket token sums (tiny agg, map-side partials), ONE window
   over the bucket-level table (rows/BUCKET_SIZE entries — at 10^12 docs
-  and 10^5-doc buckets that is 10^7 16-byte rows ~ 160 MB on one reducer;
+  and 10^5 docs per bucket that is 10^7 16-byte rows ~ 160 MB on one reducer;
   acceptable, and the level can be repeated for another 10^5x headroom),
   then an equi-join back on bucket id and a window partitioned BY bucket
   (bounded rows per reducer) for the intra-bucket prefix. The document
@@ -41,12 +38,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dq.skew import salt_from
+from dq.skew import topk
 from dq.textstats import whitespace_token_count
 
 # ---- shared constants (dq.oracles generates SQL from these) ----------------
 
-SAMPLE_MOD = 10_000          # hash buckets == basis points
+SAMPLE_MOD = 10_000          # hash slots == basis points
 # per-language keep rates in basis points (mixture weights); _default for
 # languages not listed.
 STRATA_BP = {"en": 6000, "zh": 3000, "es": 3000, "de": 1500, "fr": 1500}
@@ -59,7 +56,6 @@ LCG_MUL = 2654435761
 LCG_ADD = 40503
 
 DOMAIN_CAP_K = 25            # max docs any one domain contributes
-DOMAIN_CAP_BUCKETS = 8       # phase-1 fan-out for hot domains
 
 PACK_TOKEN_BUDGET = 512      # tokens per training bin
 PACK_BUCKET_SIZE = 100       # docs per scan bucket (10^5 at real scale)
@@ -158,25 +154,13 @@ def domain_cap_sample(
     key_col: str = "domain",
     order_col: str = "doc_id",
     k: int = DOMAIN_CAP_K,
-    buckets: int = DOMAIN_CAP_BUCKETS,
 ) -> DataFrame:
-    """Exact first-K-per-key quota, skew-proof (two-phase top-K).
+    """Exact first-K-per-key quota, skew-proof (map-side capped top-K).
 
     Keeps the ``k`` smallest ``order_col`` values per ``key_col`` with ties
     impossible (order_col is unique). Output: input columns + domain_rank.
     """
-    w1 = Window.partitionBy(key_col, "_salt").orderBy(order_col)
-    phase1 = (
-        base.withColumn("_salt", salt_from(F.col(order_col), buckets))
-        .withColumn("_r1", F.row_number().over(w1))
-        .where(F.col("_r1") <= k)
-        .drop("_r1", "_salt")
-    )
-    w2 = Window.partitionBy(key_col).orderBy(order_col)
-    return (
-        phase1.withColumn("domain_rank", F.row_number().over(w2).cast("int"))
-        .where(F.col("domain_rank") <= k)
-    )
+    return topk(base, [key_col], [order_col], k, "domain_rank")
 
 
 def token_budget_packing(
@@ -282,7 +266,7 @@ def chunk_docs(
     )
 
 
-# train/val/test split edges in SAMPLE_MOD buckets (basis points)
+# train/val/test split edges in SAMPLE_MOD slots (basis points)
 SPLIT_EDGES = [("train", 9600), ("val", 9800), ("test", 10_000)]
 
 
@@ -542,7 +526,7 @@ def split_leakage_audit(
 # ------------------------------------------------ training order ----------
 
 # Second, independent LCG for the training-order mix (distinct constants so
-# the order is uncorrelated with the sampling/split buckets that share
+# the order is uncorrelated with the sampling/split slots that share
 # lcg_bucket): xxhash's 32-bit avalanche primes, reduced mod SAMPLE_MOD
 # like every other deterministic decision in this module.
 ORDER_MUL = 2_246_822_519

@@ -16,8 +16,10 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dq.skew import topk
 
 
 def _vec(col) -> Column:
@@ -78,12 +80,8 @@ def brute_force_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", score.alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    ranked = topk(scored, ["query_id"], [F.col("score").desc(), F.col("neighbor_id")], k, "rank")
+    return ranked.select("query_id", "neighbor_id", "rank", "score")
 
 
 def brute_force_topk_vectorized(
@@ -141,12 +139,8 @@ def brute_force_topk_vectorized(
 
     cands = narrow.mapInPandas(part, schema="query_id long, neighbor_id long, score long")
     cands = cands.where(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    ranked = topk(cands, ["query_id"], [F.col("score").desc(), F.col("neighbor_id")], k, "rank")
+    return ranked.select("query_id", "neighbor_id", "rank", "score")
 
 
 def quantized_cosine_pairs(
@@ -258,12 +252,7 @@ def ivf_topk(
             else sq_l2_col(df["_q"], F.col("_cq"))
         )
         scored = df.crossJoin(F.broadcast(cents)).select("*", d2.alias("_d2"))
-        w = Window.partitionBy(idname).orderBy("_d2", "_cid")
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= topn)
-            .drop("_rn", "_d2", "_cq")
-        )
+        return topk(scored, [idname], ["_d2", "_cid"], topn, "_rn").drop("_rn", "_d2", "_cq")
 
     corpus_cells = assign(base, "_id", 1).select(
         F.col("_id").alias("neighbor_id"), F.col("_q").alias("_cv"), "_cid"
@@ -291,12 +280,8 @@ def ivf_topk(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    ranked = topk(scored, ["query_id"], [F.col("score").desc(), F.col("neighbor_id")], k, "rank")
+    return ranked.select("query_id", "neighbor_id", "rank", "score")
 
 
 def _hyperplanes(dim: int, n_bits: int, seed: int = 7) -> np.ndarray:
@@ -492,12 +477,8 @@ def lsh_topk(
     scored = cands.select(
         "query_id", "neighbor_id", quantized_dot("_query_id_v", "_neighbor_id_v").alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    ranked = topk(scored, ["query_id"], [F.col("score").desc(), F.col("neighbor_id")], k, "rank")
+    return ranked.select("query_id", "neighbor_id", "rank", "score")
 
 
 def embedding_near_dups(

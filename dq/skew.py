@@ -1,7 +1,7 @@
 """Skew handling for hot keys (north rule: 'salted keys for hot domains').
 
 At 10^12 docs a handful of domains own double-digit percentages of rows; a
-groupBy/join keyed by domain sends each hot key to ONE reducer. Three
+groupBy/join keyed by domain sends each hot key to ONE reducer. Four
 standard defusals, all exact:
 
 - algebraic aggs (count/sum/min/max): nothing to do — Spark's partial
@@ -12,6 +12,11 @@ standard defusals, all exact:
   bucket and the per-bucket distinct counts sum exactly).
 - joins against a small-but-not-broadcastable side: replicate-and-salt
   (small side exploded x B salts, big side salted by a uniform row hash).
+- per-key top-k: nothing to salt — :func:`topk` emits the plain
+  ``row_number() <= k`` window, which the optimizer caps map-side
+  (``WindowGroupLimit ... Partial`` below the exchange): a hot key crosses
+  the shuffle as at most k rows per input partition. The registry plan
+  sweep (tests/test_plans.py) pins that every top-k window plans this way.
 
 AQE's runtime skew-join splitting (enabled in dq.session) is the backstop
 for residual skew these shapes don't cover.
@@ -22,7 +27,7 @@ engine addition.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 32
@@ -32,6 +37,30 @@ def salt_from(col: Column, buckets: int = DEFAULT_BUCKETS) -> Column:
     """Deterministic uniform salt derived from a column (not rand(): resume
     and retries must re-derive identical salts)."""
     return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
+
+
+def topk(
+    df: DataFrame,
+    keys: list[str | Column],
+    order: list[str | Column],
+    k: int,
+    rank_col: str,
+) -> DataFrame:
+    """The first ``k`` rows per ``keys`` group under ``order``: ``df`` plus
+    an int ``rank_col`` (1..k), i.e. ``row_number() OVER (PARTITION BY keys
+    ORDER BY order) <= k``. Empty ``keys`` ranks the whole frame.
+
+    Skew bound: with ``k`` a literal <= ``spark.sql.optimizer.
+    windowGroupLimitThreshold`` (default 1000), Spark plans a partial
+    ``WindowGroupLimit`` below the window's exchange, so each input
+    partition ships at most k rows per key; the keyless form plans as
+    ``TakeOrderedAndProject``. Give ``order`` a total order (a unique
+    tiebreak) when the result must be deterministic.
+    """
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn(rank_col, F.row_number().over(w).cast("int")).where(
+        F.col(rank_col) <= k
+    )
 
 
 def salted_distinct_count(

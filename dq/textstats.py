@@ -144,16 +144,11 @@ def tfidf_top_terms(df, id_col: str = "doc_id", text_col: str = "text",
     )
     tf = terms.groupBy("_id", "term").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    from pyspark.sql import Window
+    from dq.skew import topk
 
-    w = Window.partitionBy("_id").orderBy(
-        F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()
-    )
-    return (
-        tf.join(df_t, "term")
-        .withColumn("term_rank", F.row_number().over(w).cast("int"))
-        .where(F.col("term_rank") <= k)
-        .select(F.col("_id").alias(id_col), "term", "tf", "df", "term_rank")
+    order = [F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()]
+    return topk(tf.join(df_t, "term"), ["_id"], order, k, "term_rank").select(
+        F.col("_id").alias(id_col), "term", "tf", "df", "term_rank"
     )
 
 

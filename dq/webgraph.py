@@ -144,15 +144,11 @@ def top_anchor_terms(terms: DataFrame, k: int = ANCHOR_TOP_K) -> DataFrame:
     """Top-k anchor terms per target domain, deterministic rank
     (n_mentions DESC, term ASC) — the window runs over the aggregated
     (domain, term) table, never the row set."""
-    from pyspark.sql.window import Window
+    from dq.skew import topk
 
-    w = Window.partitionBy("dst_domain").orderBy(
-        F.col("n_mentions").desc(), F.col("term").asc()
-    )
-    return (
-        terms.withColumn("term_rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("term_rank") <= k)
-    )
+    order = [F.col("n_mentions").desc(), F.col("term").asc()]
+    ranked = topk(terms, ["dst_domain"], order, k, "term_rank")
+    return ranked.withColumn("term_rank", F.col("term_rank").cast("bigint"))
 
 
 def pagerank(

@@ -10,6 +10,7 @@ SF = "/root/testdata/sf0.001"
 
 import contextlib
 import io
+import re
 
 
 def _explain(df, mode: str) -> str:
@@ -278,22 +279,48 @@ def test_stratified_sample_no_exchange(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_domain_cap_phase1_salted_window(spark):
-    """The two-phase top-K must never window over the raw domain partition:
-    the first (inner) window partitions by (domain, salt)."""
-    import re
+def _shuffle_records_written(spark, action) -> int:
+    """Shuffle records written by the stages ``action`` runs, read from the
+    status store after the listener bus drains (no extra Spark job)."""
+    sc = spark.sparkContext._jsc.sc()
+    quantiles = spark.sparkContext._gateway.new_array(
+        spark.sparkContext._gateway.jvm.double, 0
+    )
 
-    from dq.queries import domain_cap_quota
+    def stages():
+        it = sc.statusStore().stageList(None, False, False, quantiles, None).iterator()
+        out = {}
+        while it.hasNext():
+            st = it.next()
+            out[(st.stageId(), st.attemptId())] = st.shuffleWriteRecords()
+        return out
 
-    plan = plan_of(domain_cap_quota(spark, SF))
-    nodes = re.split(r"\n(?=\(\d+\) )", plan)
-    windows = [
-        n for n in nodes
-        if n.split("\n")[0].rstrip().endswith(("Window", "WindowGroupLimit"))
+    sc.listenerBus().waitUntilEmpty()
+    before = set(stages())
+    action()
+    sc.listenerBus().waitUntilEmpty()
+    return sum(n for sid, n in stages().items() if sid not in before)
+
+
+def test_domain_cap_one_key_mega_frame_capped_map_side(spark):
+    """One domain owning every row of a 400k-row frame: the top-K is exact,
+    and the map-side WindowGroupLimit lets at most K rows per input
+    partition cross the domain exchange — the skew bound topk relies on."""
+    from dq.sampling import DOMAIN_CAP_K, domain_cap_sample
+
+    n, parts, mul = 400_000, 8, 7919  # id * mul % n is a bijection on [0, n)
+    base = spark.range(0, n, 1, parts).select(
+        ((F.col("id") * mul) % n).alias("doc_id"), F.lit("hot").alias("domain")
+    )
+    out = domain_cap_sample(base)
+    rows = []
+    shuffled = _shuffle_records_written(spark, lambda: rows.extend(out.collect()))
+    want = [
+        (doc_id, "hot", rank)
+        for rank, doc_id in enumerate(sorted(i * mul % n for i in range(n))[:DOMAIN_CAP_K], 1)
     ]
-    assert len(windows) >= 2, plan
-    # the phase-1 (salted) window must exist alongside the phase-2 one
-    assert any("_salt" in n for n in windows), plan
+    assert sorted(tuple(r) for r in rows) == want
+    assert 0 < shuffled <= DOMAIN_CAP_K * parts, shuffled
 
 
 def test_token_packing_no_text_in_exchange(spark):
@@ -591,12 +618,14 @@ def test_snapshot_dedup_exchanges_carry_fp_only(spark):
 def test_term_postings_ranks_narrow_frame_only(spark):
     """The inverted-index build ranks the narrow (term, doc_id, tf) frame:
     no text column crosses any exchange, no cartesian product, and the
-    phase-1 window partitions on (term, salt) so a hot term fans out."""
+    per-term window is capped map-side below the term exchange so a hot
+    term reaches its reducer as <= k rows per input partition."""
     import re
 
     from dq.queries import term_postings
 
-    plan = plan_of(term_postings(spark, SF))
+    df = term_postings(spark, SF)
+    plan = plan_of(df)
     nodes = re.split(r"\n(?=\(\d+\) )", plan)
     for node in nodes:
         if node.split("\n")[0].rstrip().endswith("Exchange"):
@@ -604,7 +633,8 @@ def test_term_postings_ranks_narrow_frame_only(spark):
             assert inp and "text#" not in inp.group(2), node
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "_salt" in plan  # the skew-proof phase-1 window is in the plan
+    tree = df._jdf.queryExecution().executedPlan().toString()
+    assert ", Partial" in tree and uncapped_topk_windows(tree) == [], tree
 
 
 def test_semdedup_pair_join_keys_include_sub_split(spark):
@@ -862,6 +892,52 @@ def test_above_avg_decorrelates_without_cartesian(spark):
 # ------------------------------------------------ registry-wide plan audit --
 
 
+# Queries whose row_number() window feeds a rank filter yet cannot be
+# capped map-side, each with the reason that is acceptable.
+UNCAPPED_TOPK_ALLOWLIST = {
+    "exact_dedup_survivors": "n_copies counts the same fingerprint partition, "
+    "so every row of a family must reach the window; no group limit applies",
+}
+
+
+def _tree_node(line: str) -> tuple[int, str]:
+    """(indent column, node text) of one ``executedPlan().toString()`` line."""
+    start = re.match(r"[ :|+\-]*", line).end()
+    return start, line[start:]
+
+
+def uncapped_topk_windows(plan: str) -> list[str]:
+    """``Window [row_number() ...]`` nodes whose rank a Filter bounds
+    (``<= k``, ``< k``, ``= 1``) but which sit neither over
+    ``WindowGroupLimit Final`` <- Exchange <- ``WindowGroupLimit Partial``
+    (each input partition ships <= k rows per key) nor over
+    ``TakeOrderedAndProject`` (the keyless form)."""
+    lines = plan.splitlines()
+    filters = " ".join(t for _, t in map(_tree_node, lines) if t.startswith("Filter"))
+    bad = []
+    for i, line in enumerate(lines):
+        col, text = _tree_node(line)
+        if not text.startswith("Window [") or "row_number()" not in text:
+            continue
+        ranks = re.findall(r"row_number\(\) windowspecdefinition\(.*?\) AS (\S+#\d+)", text)
+        if not any(re.search(re.escape(r) + r" (<=|<|=) ", filters) for r in ranks):
+            continue
+        chain = []  # the unary chain below the window, down to the Partial
+        for below in lines[i + 1:]:
+            c, t = _tree_node(below)
+            if c != col + 3 * (len(chain) + 1):
+                break
+            chain.append(t.rsplit(", ", 1)[-1] if t.startswith("WindowGroupLimit") else t)
+            if not t.startswith(("WindowGroupLimit", "Sort", "Exchange")) or t.endswith("Partial"):
+                break
+        capped = chain[:1] == ["Final"] and chain[-1] == "Partial" and any(
+            t.startswith("Exchange") for t in chain
+        )
+        if not (capped or chain[0].startswith("TakeOrderedAndProject")):
+            bad.append(text)
+    return bad
+
+
 def test_registry_sweep_no_row_python_no_cartesian(spark):
     """EVERY gate query's physical plan, mechanically audited: zero
     row-at-a-time Python UDFs (BatchEvalPython — the north-rule
@@ -869,12 +945,16 @@ def test_registry_sweep_no_row_python_no_cartesian(spark):
     ArrowEvalPython / FlatMapGroupsInPandas and are allowed) and zero
     CartesianProduct. Spot plan tests above pin SHAPES; this sweep pins
     the two never-acceptable nodes across the whole registry, so a future
-    query can't quietly ship either one."""
+    query can't quietly ship either one. It also pins the top-k skew
+    bound: every rank-filtered row_number() window is capped map-side
+    below its exchange or plans as TakeOrderedAndProject
+    (:func:`uncapped_topk_windows`), unless allowlisted with a reason."""
     from dq.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
     spark.catalog.clearCache()  # cached fragments can hide a plan's nodes
     offenders = {}
+    uncapped = set()
     for name, fn in QUERIES.items():
         df = fn(spark, sf)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -883,6 +963,12 @@ def test_registry_sweep_no_row_python_no_cartesian(spark):
             for node in ("BatchEvalPython", "CartesianProduct")
             if node in plan
         ]
+        if uncapped_topk_windows(plan):
+            uncapped.add(name)
+            if name not in UNCAPPED_TOPK_ALLOWLIST:
+                bad.append("uncapped top-k Window")
         if bad:
             offenders[name] = bad
     assert offenders == {}, f"forbidden plan nodes: {offenders}"
+    # a stale allowlist entry would silently excuse a future regression
+    assert uncapped == set(UNCAPPED_TOPK_ALLOWLIST), uncapped

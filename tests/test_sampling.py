@@ -1,7 +1,6 @@
 """Sampling / domain balancing / token packing semantics."""
 
 import pandas as pd
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dq import sampling
@@ -29,22 +28,24 @@ def test_stratified_sample_deterministic_and_rated(spark):
     assert kept1 == kept2 and kept1
 
 
-def test_domain_cap_two_phase_equals_naive(spark):
+def test_domain_cap_matches_python_oracle(spark):
     # skewed: domain 'hot' has 200 rows, others 3 each
     rows = [(i, "hot") for i in range(200)]
     rows += [(1000 + 10 * d + j, f"cold{d}") for d in range(5) for j in range(3)]
     base = spark.createDataFrame(rows, "doc_id bigint, domain string")
     k = 7
-    two_phase = sampling.domain_cap_sample(base, k=k, buckets=4)
-    naive = (
-        base.withColumn(
-            "domain_rank",
-            F.row_number().over(Window.partitionBy("domain").orderBy("doc_id")).cast("int"),
-        ).where(F.col("domain_rank") <= k)
+    got = sampling.domain_cap_sample(base, k=k)
+    by_domain: dict[str, list[int]] = {}
+    for doc_id, domain in rows:
+        by_domain.setdefault(domain, []).append(doc_id)
+    want = sorted(
+        (doc_id, domain, rank)
+        for domain, ids in by_domain.items()
+        for rank, doc_id in enumerate(sorted(ids)[:k], start=1)
     )
-    assert sorted(two_phase.collect()) == sorted(naive.collect())
-    got = two_phase.groupBy("domain").count().collect()
-    assert {r["domain"]: r["count"] for r in got}["hot"] == k
+    assert sorted(tuple(r) for r in got.collect()) == want
+    assert dict(got.dtypes)["domain_rank"] == "int"
+    assert sum(1 for r in want if r[1] == "hot") == k
 
 
 def test_token_packing_matches_pandas_prefix_sum(spark):
