@@ -77,7 +77,6 @@ HEADLINE = [
     "neardup_ledger_batch2",     # round-4: LSH band ledger cross-run probe
     "pii_type_counts",           # round-4: per-rule scrub hit report
     "mojibake_fixed",            # round-4: UTF-8-as-cp1252 repair pass
-    "media_header_sniff",        # round-4: binary container header parsing
     "dsir_selection",            # round-4: importance-resampling data selection
     "domain_boilerplate",        # round-4: per-site template-line removal
     "vocab_stats",               # round-4: per-language vocabulary profile
@@ -176,9 +175,6 @@ HEADLINE = [
     # per-job fixed overhead, not engine throughput.
     # snapshot_drift_summary shares the band_drift job — benching both would
     # time the same scans twice.
-    # image_dhash_dups stays OUT of the headline for the same reason as
-    # media_decode_features: fixed 48-asset synthesized corpus — wall time
-    # would measure worker spawn over a constant input, not throughput at sf.
     # near_dup_survivors stays OUT of the headline for the same reason as
     # near_dup_clusters (it consumes those labels): iterative CC rounds
     # dominate local wall time — the gate + pytest own its correctness.
@@ -186,10 +182,6 @@ HEADLINE = [
     # near_dup_clusters: it is iterative (8 argmax-collect rounds over the
     # small vocab frame), so local wall time measures per-job fixed
     # overhead, not engine throughput — pytest pins it to the python trainer.
-    # media_decode_features / media_frame_samples stay OUT of the headline:
-    # their corpus is a fixed 48-asset synthesized set (decode correctness
-    # lives in pytest), so wall time would measure Python-worker spawn over
-    # a constant-size input, not engine throughput at sf.
     # near_dup_clusters / near_dup_clusters_star stay OUT of the headline:
     # both are iterative (several Spark jobs of convergence checks over the
     # small planted pair graph), so local wall time measures per-job fixed

@@ -23,8 +23,10 @@ dupcheck    per-partition duplicate metric + history merge (duplicidade family)
 metrics     grouped profiling aggregations (qualitativo family)
 remediate   failure-manifest remediation loop (flop family)
 textstats   token counting, quality scoring, fingerprinting
-multimodal  binary media columns: schema + plumbing (decoders stubbed)
 pipeline    end-to-end keep/drop pipeline with lineage + metrics sinks
+
+Payload scope: web text (url, warc_ts, html, text, lang). Binary media
+(image/audio/video decode) is out of scope.
 """
 
 __version__ = "0.1.0"

@@ -157,9 +157,11 @@ def ks_drift(old: DataFrame, new: DataFrame, value_col: str = "n_chars") -> Data
     Exactness without floats: D = max_v |Fa(v)/na - Fb(v)/nb| is compared
     via the cross-multiplied integer |Fa(v)*nb - Fb(v)*na| (the
     token_drift_topk discipline); the reported ks_ppm is one final DIV of
-    exact integers. Products stay in int64 while na*nb < 2^63 (~3e9 rows
-    per side) — past that, run KS on a fixed-rate sample per side or lift
-    the three products to decimal(38,0); the gate corpus is nowhere near.
+    exact integers. The binding product is ks_ppm's numerator
+    ks_num * 1000000 with ks_num <= na*nb, so it stays in int64 only while
+    na*nb < 9.2e12 (~3e6 rows per side) — past that, run KS on a
+    fixed-rate sample per side or lift the products to decimal(38,0); the
+    gate corpus is nowhere near.
 
     Scale shape: each corpus reduces to value-grouped counts (one map-side
     combinable hash-agg each, value never the row); the cumulative window
@@ -223,8 +225,9 @@ def rank_sum_drift(old: DataFrame, new: DataFrame, value_col: str = "n_chars") -
     midrank 2S + c + 1, and u2 = 2U stays integral: u2_old =
     Σ c_old(v)·m2(v) − n_old·(n_old+1). The invariant
     u2_old + u2_new == 2·n_old·n_new is pytest-pinned. Same scale shape
-    as ks_drift: per-value count aggs, one value-domain-bounded window,
-    int64 headroom to ~2e9 rows/side (Σ c·m2 <= 2N²).
+    as ks_drift: per-value count aggs, one value-domain-bounded window.
+    int64 headroom is set by cles_ppm's numerator u2_old * 1000000 with
+    u2_old <= 2·n_old·n_new, so n_old·n_new < 4.6e12 (~2e6 rows/side).
     """
     from pyspark.sql import Window
 

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from typing import Iterable, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -87,13 +87,6 @@ def mg_merge_into(state: dict[str, int], counts: Counter, capacity: int) -> None
                 state[tok] = nv
             else:
                 del state[tok]
-
-
-def mg_stream(tokens: Iterable[str], capacity: int) -> dict[str, int]:
-    """Reference one-shot MG over a token iterable (tests only)."""
-    state: dict[str, int] = {}
-    mg_merge_into(state, Counter(tokens), capacity)
-    return state
 
 
 def mg_summaries(

@@ -6,9 +6,9 @@ thresholds), so the two sides cannot drift. Determinism notes mirror
 dq/queries.py: cents quantization before sums, integer-derived double
 divisions only, identical tie-breaks on every rank.
 
-Queries with no entry here (minhash/simhash/embedding LSH, UDF pipeline,
-multimodal) are genuinely non-SQL-expressible (xxhash64 / blake2b / model
-state); the driver records rows-only checks for them.
+Queries with no entry here (minhash/simhash/embedding LSH, UDF pipeline)
+are genuinely non-SQL-expressible (xxhash64 / blake2b / model state); the
+correctness gate checks them rows-only.
 """
 
 from __future__ import annotations
@@ -5177,9 +5177,13 @@ FROM agg
 ORACLES["snapshot_rank_drift"] = _snapshot_rank_sql()
 
 
-def _deepwalk_sql() -> str:
+def _deepwalk_sql() -> tuple[str, str]:
     """Twin of queries.deepwalk_walks — same dst-sorted neighbor index,
-    same poly-hash + LCG state chain, steps unrolled as join CTEs."""
+    same poly-hash + LCG state chain, steps unrolled as join CTEs.
+
+    Returns (cte_chain, final_cte_name): the ``WITH ...`` chain up to the
+    last step CTE and that CTE's name, so the walks and skip-gram twins
+    each append their own final SELECT."""
     from dq.classifier import POLY_MOD, POLY_MUL
     from dq.sampling import LCG_ADD, LCG_MUL, SAMPLE_MOD
     from dq.webgraph import DEEPWALK_STEPS, DEEPWALK_WALKS
@@ -5205,8 +5209,7 @@ def _deepwalk_sql() -> str:
         )
         prev = f"s{s}"
     chain = ",\n".join(rounds)
-    return f"""
-WITH {_link_edges_ctes()},
+    ctes = f"""WITH {_link_edges_ctes()},
 adj AS (SELECT DISTINCT src_domain, dst_domain FROM edges),
 idx AS (
   SELECT src_domain, dst_domain,
@@ -5222,11 +5225,18 @@ idx AS (
   FROM starts CROSS JOIN (VALUES {wvals}) AS wv(wn)
 ),
 {chain}
-SELECT start, CAST(walk_no AS INTEGER) AS walk_no, seq FROM {prev}
+"""
+    return ctes, prev
+
+
+def _deepwalk_walks_sql() -> str:
+    ctes, final = _deepwalk_sql()
+    return f"""
+{ctes}SELECT start, CAST(walk_no AS INTEGER) AS walk_no, seq FROM {final}
 """
 
 
-ORACLES["deepwalk_walks"] = _deepwalk_sql()
+ORACLES["deepwalk_walks"] = _deepwalk_walks_sql()
 
 
 def _ams_f2_sql() -> str:
@@ -5282,11 +5292,8 @@ def _deepwalk_skipgrams_sql() -> str:
     re-split and windowed into (center, context) pairs."""
     from dq.webgraph import SKIPGRAM_WINDOW
 
-    walks = _deepwalk_sql().strip()
-    # strip the trailing final SELECT, keep the CTE chain + final name
-    head, _, final = walks.rpartition("SELECT start, CAST(walk_no AS INTEGER) AS walk_no, seq FROM ")
-    final = final.strip()
-    return f"""{head}
+    ctes, final = _deepwalk_sql()
+    return f"""{ctes}
 , lst AS (
   SELECT string_split(seq, '->') AS l FROM {final}
 ), pos AS (

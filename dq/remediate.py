@@ -135,8 +135,3 @@ def flip_status_all(
         schema=DQ_FAILURES,
     )
     return volumetry.merge_history(failures, fixed, keys=["banco", "tabela", "dt_foto"])
-
-
-def flip_status(spark: SparkSession, failures: DataFrame, f: Failure) -> DataFrame:
-    """Single-failure convenience wrapper over :func:`flip_status_all`."""
-    return flip_status_all(spark, failures, [f])

@@ -66,12 +66,6 @@ def lcg_bucket(key: Column) -> Column:
     return F.pmod(key * LCG_MUL + LCG_ADD, F.lit(SAMPLE_MOD))
 
 
-def hash_bucket(key: Column) -> Column:
-    """Scale-path bucket assignment (xxhash64 — any column type; Spark-only,
-    so the oracle-checked queries use :func:`lcg_bucket` on doc_id)."""
-    return F.pmod(F.xxhash64(key), F.lit(SAMPLE_MOD))
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -75,18 +75,3 @@ DQ_LINEAGE = T.StructType(
         T.StructField("status", T.LongType(), False),
     ]
 )
-
-# Multimodal asset table: opaque binary payload + typed metadata
-# (image/audio/video treated uniformly; decode is a pluggable UDF).
-MEDIA_ASSETS = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("codec", T.StringType(), True),
-    ]
-)

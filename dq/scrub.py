@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -44,15 +42,6 @@ def scrub_col(text: Column) -> Column:
     return out
 
 
-def scrubbed_flag_col(text: Column) -> Column:
-    """True when the document contained any PII (pre/post inequality) —
-    null-safe: NULL text scrubs to NULL and must flag False, not NULL (a
-    three-valued flag poisons filters and sums downstream)."""
-    from pyspark.sql import functions as F
-
-    return ~scrub_col(text).eqNullSafe(text)
-
-
 _COMPILED = [(re.compile(p), r) for _, p, r in SCRUB_RULES]
 
 
@@ -63,7 +52,3 @@ def scrub_text(text: str | None) -> str | None:
     for pat, rep in _COMPILED:
         text = pat.sub(rep, text)
     return text
-
-
-def scrub_pdf(texts: pd.Series) -> pd.Series:
-    return texts.map(scrub_text, na_action="ignore")

@@ -91,15 +91,6 @@ def fingerprint64(col) -> Column:
     return F.xxhash64(norm)
 
 
-def shingle_fingerprints(col, n: int = 5, cap: int = 64) -> Column:
-    """First ``cap`` word-shingle hashes (content-defined chunk fingerprints
-    for containment/overlap estimation); incremental zip_with hashing, see
-    dq.dedup.hashed_shingles_col."""
-    from dq.dedup import hashed_shingles_col
-
-    return F.slice(hashed_shingles_col(_text(col), n), 1, cap)
-
-
 def word_ngrams_col(words: Column, n: int) -> Column:
     """Space-joined word n-grams from a words-array COLUMN (pass a real
     column, not an expression: grams extend incrementally via zip_with over

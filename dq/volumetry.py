@@ -71,24 +71,6 @@ def merge_history(history: DataFrame, fresh: DataFrame, keys: list[str] | None =
     return kept.unionByName(fresh).dropDuplicates()
 
 
-def merge_history_table(
-    spark: SparkSession,
-    table: str,
-    fresh: DataFrame,
-    keys: list[str] | None = None,
-    partition_col: str = "dt_foto",
-) -> None:
-    """C2 when the history lives as a PARTITIONED CATALOG TABLE: same upsert
-    semantics as :func:`merge_history`, executed as a dynamic-partition
-    overwrite through dq.io.merge_upsert — only the partitions carrying
-    fresh rows are rewritten (≙ ColetaVolumetria.scala:97-123's
-    read-then-overwrite, staged for Spark 3 legality; Iceberg MERGE INTO in
-    prod)."""
-    from dq.io import merge_upsert
-
-    merge_upsert(spark, table, fresh, keys or MERGE_KEYS, partition_col)
-
-
 def collect_volumetria(
     spark: SparkSession,
     monitored: DataFrame,

@@ -149,13 +149,15 @@ def test_percentiles_window_over_histogram_not_rows(spark):
 
 
 def test_exact_dedup_survivors_narrow_exchange(spark):
-    """The survivor window runs over a (fingerprint, doc_id) projection —
-    document text never enters an exchange (VERDICT r2 wrong-#3)."""
+    """The survivor pick is one hash-agg (no window) over a (fingerprint,
+    doc_id) projection — document text never enters an exchange (VERDICT
+    r2 wrong-#3)."""
     import re
 
     from dq.queries import exact_dedup_survivors
 
     plan = plan_of(exact_dedup_survivors(spark, SF))
+    assert "Window" not in plan, plan
     nodes = re.split(r"\n(?=\(\d+\) )", plan)
     exchanges = [n for n in nodes if n.split("\n")[0].rstrip().endswith("Exchange")]
     assert exchanges, f"no exchange found in plan:\n{plan}"
@@ -892,14 +894,6 @@ def test_above_avg_decorrelates_without_cartesian(spark):
 # ------------------------------------------------ registry-wide plan audit --
 
 
-# Queries whose row_number() window feeds a rank filter yet cannot be
-# capped map-side, each with the reason that is acceptable.
-UNCAPPED_TOPK_ALLOWLIST = {
-    "exact_dedup_survivors": "n_copies counts the same fingerprint partition, "
-    "so every row of a family must reach the window; no group limit applies",
-}
-
-
 def _tree_node(line: str) -> tuple[int, str]:
     """(indent column, node text) of one ``executedPlan().toString()`` line."""
     start = re.match(r"[ :|+\-]*", line).end()
@@ -948,13 +942,12 @@ def test_registry_sweep_no_row_python_no_cartesian(spark):
     query can't quietly ship either one. It also pins the top-k skew
     bound: every rank-filtered row_number() window is capped map-side
     below its exchange or plans as TakeOrderedAndProject
-    (:func:`uncapped_topk_windows`), unless allowlisted with a reason."""
+    (:func:`uncapped_topk_windows`), with no exceptions."""
     from dq.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
     spark.catalog.clearCache()  # cached fragments can hide a plan's nodes
     offenders = {}
-    uncapped = set()
     for name, fn in QUERIES.items():
         df = fn(spark, sf)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -964,11 +957,7 @@ def test_registry_sweep_no_row_python_no_cartesian(spark):
             if node in plan
         ]
         if uncapped_topk_windows(plan):
-            uncapped.add(name)
-            if name not in UNCAPPED_TOPK_ALLOWLIST:
-                bad.append("uncapped top-k Window")
+            bad.append("uncapped top-k Window")
         if bad:
             offenders[name] = bad
     assert offenders == {}, f"forbidden plan nodes: {offenders}"
-    # a stale allowlist entry would silently excuse a future regression
-    assert uncapped == set(UNCAPPED_TOPK_ALLOWLIST), uncapped
