@@ -158,8 +158,8 @@ def main(argv: list[str] | None = None) -> int:
 
     monitored = read_path(spark, args.data_path)
     pexpr = default_partition_expr(args.campo, args.formato)
-    history = read_path(spark, args.history_path, default_schema=volumetry.DQ_VOLUMETRIA)
     if args.cmd == "volumetria":
+        history = read_path(spark, args.history_path, default_schema=volumetry.DQ_VOLUMETRIA)
         new_hist, failure = volumetry.collect_volumetria(
             spark, monitored, history, args.db, args.table, args.dt_foto, pexpr,
             campo=args.campo, formato=args.formato,

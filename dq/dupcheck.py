@@ -14,7 +14,8 @@ shuffle keyed by a uniform 256-bit hash (no skew by construction), partial
 map-side aggregation, and no ``distinct *`` row-wide shuffle.
 
 Consolidation (JuntaTabela) merges aux rows into the history cube with a
-REAL left_anti join — fixing the reference's self-tautology join bug
+REAL keyed supersede (``dq.volumetry.merge_history``: one exchange on the
+keys) — fixing the reference's self-tautology join bug
 (duplicidade/JuntaTabela2.scala:48-50, SURVEY.md §2.3 J3).
 """
 
@@ -23,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dq.io import literal_frame
 from dq.schema import DQ_DUPLICADOS
 from dq.volumetry import merge_history
 
@@ -118,10 +120,10 @@ def dup_metric_row(
 
 def consolidate(history: DataFrame, aux: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """JuntaTabela merge: history rows not superseded by aux + aux, distinct
-    (≙ JuntaTabela.scala:31-87, with a real anti-join) — the same keyed
-    upsert as :func:`dq.volumetry.merge_history`, on the same four keys."""
+    (≙ JuntaTabela.scala:31-87, with a real key match) — the same keyed
+    supersede as :func:`dq.volumetry.merge_history`, on the same four keys."""
     return merge_history(history, aux, keys)
 
 
 def empty_history(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema=DQ_DUPLICADOS)
+    return literal_frame(spark, [], DQ_DUPLICADOS)

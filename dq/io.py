@@ -56,17 +56,45 @@ def _recover_swap_debris(path: str) -> None:
         os.rename(final_tmp, path)
 
 
+def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-known rows as a one-partition frame built in the JVM.
+
+    ``schema`` is a StructType or a DDL string; each row is a tuple in its
+    field order (``None`` for NULL). The rows become one ``inline`` of an
+    array of literal structs over a 1-row range (literals over a range, as
+    in ``queries.volumetria_gate_failure``). A frame made from a Python
+    list instead scans a pickled Python RDD, so even a 1-row control write
+    would start a Python worker.
+    """
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType) for v, f in zip(row, schema.fields)]) for row in rows
+    ]
+    # the array cast names the fields and types the zero-row array<void>;
+    # every field is nullable, as parquet writes it
+    row_type = StructType([StructField(f.name, f.dataType) for f in schema.fields])
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs).cast(ArrayType(row_type))))
+
+
 def read_path(spark: SparkSession, path: str, default_schema=None, fmt: str = "parquet") -> DataFrame:
-    """Read a parquet/orc path; absent path + default_schema -> empty frame
-    (first run of a history table). Restores interrupted-swap debris first:
-    a path missing because a previous overwrite crashed mid-swap must read
-    as the last committed copy, never as "first run"."""
+    """Read a parquet/orc path. ``default_schema`` is the table's declared
+    schema: a present path is read under it (no inference job), an absent
+    one is an empty frame of it (first run of a history table). Restores
+    interrupted-swap debris first: a path missing because a previous
+    overwrite crashed mid-swap must read as the last committed copy, never
+    as "first run"."""
     _recover_swap_debris(path)
     if not os.path.exists(path):
         if default_schema is not None:
-            return spark.createDataFrame([], schema=default_schema)
+            return literal_frame(spark, [], default_schema)
         raise FileNotFoundError(path)
-    return spark.read.format(fmt).load(path)
+    reader = spark.read.format(fmt)
+    if default_schema is not None:
+        reader = reader.schema(default_schema)
+    return reader.load(path)
 
 
 def partition_values(df: DataFrame, partition_expr) -> DataFrame:
@@ -84,9 +112,10 @@ def partition_exists(df: DataFrame, partition_expr: str, value: str) -> bool:
 
     The format dispatch (formato 1|2) is resolved by the CALLER in Python
     before building ``partition_expr`` — a plain equality predicate that
-    Catalyst turns into partition pruning (SURVEY.md §4.1 row 1).
+    Catalyst turns into partition pruning (SURVEY.md §4.1 row 1). One
+    short-circuit ``isEmpty`` job.
     """
-    return df.where(F.expr(partition_expr) == F.lit(value)).limit(1).count() > 0
+    return not df.where(F.expr(partition_expr) == F.lit(value)).isEmpty()
 
 
 def overwrite_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
@@ -112,13 +141,11 @@ def overwrite_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     for debris in (stage, final_tmp):
         shutil.rmtree(debris, ignore_errors=True)
     df.write.mode("overwrite").format(fmt).save(stage)
-    spark = df.sparkSession
     if os.path.exists(path):
         os.rename(path, final_tmp)
     os.rename(stage, path)
     if os.path.exists(final_tmp):
         shutil.rmtree(final_tmp)
-    _ = spark  # session kept for API symmetry with the Iceberg backend
 
 
 def append_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:

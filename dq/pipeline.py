@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from dq import heuristics
 from dq.extract import extract_text_col
-from dq.io import CheckpointManifest
+from dq.io import CheckpointManifest, literal_frame
 from dq.langid import detect_lang_batch
 from dq.perplexity import perplexity_batch
 from dq.scrub import scrub_col
@@ -529,7 +529,7 @@ def run(
         # empty input on a first run (a day with no crawl): nothing was
         # written — return an empty, correctly-typed lineage frame rather
         # than crashing on a missing path
-        return spark.createDataFrame([], LINEAGE_SCHEMA_DDL)
+        return literal_frame(spark, [], LINEAGE_SCHEMA_DDL)
     # partition-dir type inference would surface dt_foto as int; pin string
     lineage = spark.read.parquet(lineage_dir).withColumn(
         PARTITION_COL, F.col(PARTITION_COL).cast("string")

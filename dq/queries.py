@@ -137,8 +137,9 @@ def dup_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def junta_consolidate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD merge (C2/U1/U2/P4 as real left_anti): stale history rows are
-    superseded by freshly recomputed aux rows for 1995 months."""
+    """SCD merge (C2/U1/U2/P4 as a real keyed supersede, one exchange on
+    the merge keys): stale history rows are superseded by freshly
+    recomputed aux rows for 1995 months."""
     from dq.volumetry import merge_history
 
     orders = _t(spark, sf_dir, "orders")

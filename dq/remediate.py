@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dq import volumetry
-from dq.io import partition_exists
+from dq.io import literal_frame, partition_exists
 from dq.schema import DQ_FAILURES
 
 
@@ -80,8 +80,8 @@ def remediate_volumetria(
     ]
 
     # accumulate every healed failure's fresh row and fixed flag, then do
-    # ONE merge + ONE flip: the old per-failure chaining stacked an
-    # anti-join + union + dropDuplicates PER manifest entry, so a 300-
+    # ONE merge + ONE flip: the old per-failure chaining stacked a merge
+    # PER manifest entry, so a 300-
     # failure backlog built a 300-deep lazy plan (the iterative-loop trap —
     # CLAUDE.md documents a 12-round uncheckpointed loop hanging >5 min)
     fresh_rows: list[DataFrame] = []
@@ -124,14 +124,16 @@ def flip_status_all(
     spark: SparkSession, failures: DataFrame, fs: list[Failure]
 ) -> DataFrame:
     """Status flip 0->1 for a BATCH of healed failures (≙ CorrigirBuraco.
-    scala:172-215): the :func:`dq.volumetry.merge_history` upsert keyed on
-    (banco, tabela, dt_foto) — one anti-join + one union of the status=1
-    rows, so plan depth is constant in the number of failures."""
-    fixed = spark.createDataFrame(
+    scala:172-215): the :func:`dq.volumetry.merge_history` keyed supersede
+    on (banco, tabela, dt_foto) by the status=1 rows, a JVM-side literal
+    frame — one exchange, so plan depth is constant in the number of
+    failures."""
+    fixed = literal_frame(
+        spark,
         [
             (f.banco, f.tabela, f.dt_foto, f.var_nome_campo, f.var_formato_dt_foto, 1)
             for f in fs
         ],
-        schema=DQ_FAILURES,
+        DQ_FAILURES,
     )
     return volumetry.merge_history(failures, fixed, keys=["banco", "tabela", "dt_foto"])

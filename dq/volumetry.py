@@ -3,13 +3,14 @@
 Semantics reproduced from volumetria/ColetaVolumetria.scala:31-123:
 partition gate -> (failure row | measured count row) -> SCD-style history
 merge. Deviations (documented, SURVEY.md §4.3): the merge key is a real
-multi-column predicate (left_anti join), NOT a null-unsafe concat string
-(ColetaVolumetria.scala:100); the pre-write ORDER BY is dropped
+multi-column key (a null-safe keyed supersede), NOT a null-unsafe concat
+string (ColetaVolumetria.scala:100); the pre-write ORDER BY is dropped
 (non-semantic); read-then-overwrite is staged (Spark 3 legality).
 
 Scale: the measured count is a partition-pruned scan + partial (map-side)
-count — no shuffle of data rows; the history merge shuffles only the tiny
-history table; the anchor/fresh frames are 1 row and broadcast.
+count — no shuffle of data rows; the history merge is one exchange of the
+history and fresh rows on the merge keys; the failure row and empty
+histories are JVM-side literal frames (``dq.io.literal_frame``).
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dq.io import literal_frame, partition_exists
 from dq.schema import DQ_FAILURES, DQ_VOLUMETRIA
 
 MERGE_KEYS = ["banco", "tabela", "dt_foto", "dt_processamento"]
@@ -26,9 +28,7 @@ def failure_row(
     spark: SparkSession, banco: str, tabela: str, dt_foto: str, campo: str, formato: str
 ) -> DataFrame:
     """Constant-projection failure row, status=0 (≙ ColetaVolumetria.scala:54-62)."""
-    return spark.createDataFrame(
-        [(banco, tabela, dt_foto, campo, formato, 0)], schema=DQ_FAILURES
-    )
+    return literal_frame(spark, [(banco, tabela, dt_foto, campo, formato, 0)], DQ_FAILURES)
 
 
 def measure_row(
@@ -61,14 +61,18 @@ def measure_row(
 def merge_history(history: DataFrame, fresh: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """SCD-style upsert (C2 ≙ ColetaVolumetria.scala:97-123).
 
-    history rows whose key collides with a fresh row are replaced; null-safe
-    key equality (eqNullSafe) instead of the reference's concat trick (P4).
-    ``fresh`` is tiny (per-run rows) -> broadcast anti-join, no history shuffle.
+    history rows whose key collides with a fresh row are replaced, then the
+    result is distinct. A keyed supersede: history (tag 0) and fresh (tag 1)
+    are unioned and a key keeps only its rows of ``max(tag)``. The window
+    groups NULL keys together, so the match is null-safe (the reference's
+    concat trick is not, P4). One exchange, on ``keys``: the distinct needs
+    its rows clustered on all columns, which a partitioning on a subset of
+    them already gives.
     """
     keys = keys or MERGE_KEYS
-    cond = [history[k].eqNullSafe(fresh[k]) for k in keys]
-    kept = history.alias("h").join(F.broadcast(fresh.alias("f")), cond, "left_anti")
-    return kept.unionByName(fresh).dropDuplicates()
+    tagged = history.withColumn("_tag", F.lit(0)).unionByName(fresh.withColumn("_tag", F.lit(1)))
+    top = tagged.withColumn("_top", F.max("_tag").over(Window.partitionBy(*keys)))
+    return top.where(F.col("_tag") == F.col("_top")).drop("_tag", "_top").dropDuplicates()
 
 
 def collect_volumetria(
@@ -84,8 +88,6 @@ def collect_volumetria(
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """Full ColetaVolumetria lifecycle. Returns (new_history, failure_row) —
     exactly one is non-None (partition gate, C1)."""
-    from dq.io import partition_exists
-
     if not partition_exists(monitored, partition_expr, dt_foto):
         return None, failure_row(spark, banco, tabela, dt_foto, campo, formato)
     fresh = measure_row(monitored, banco, tabela, dt_foto, partition_expr)
@@ -93,7 +95,7 @@ def collect_volumetria(
 
 
 def empty_history(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema=DQ_VOLUMETRIA)
+    return literal_frame(spark, [], DQ_VOLUMETRIA)
 
 
 # ---- robust anomaly flags over a volumetry history --------------------------

@@ -132,6 +132,101 @@ def test_partition_values_and_exists(spark):
     assert not dqio.partition_exists(df, "p", "9")
 
 
+def _jobs_fired(spark, action) -> int:
+    """Spark jobs ``action`` fires, by job id from the status tracker after
+    the listener bus drains."""
+    sc = spark.sparkContext
+
+    def ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = ids()
+    action()
+    return len(ids() - before)
+
+
+def _lake(spark, root):
+    """A table hive-partitioned on dt_foto (20240101..03), one file per
+    partition; each day has 25 rows, 20 distinct."""
+    df = spark.range(0, 75, 1, 1).selectExpr("id % 25 % 20 AS v", "concat('2024010', id DIV 25 + 1) AS dt_foto")
+    df.write.partitionBy("dt_foto").parquet(root)
+    return root
+
+
+def test_partition_exists_one_job(spark, tmp_path):
+    df = dqio.read_path(spark, _lake(spark, str(tmp_path / "lake")))
+    got = []
+    # a value pruning removes still plans one empty scan partition: one
+    # 1-task job that reads no file
+    for value in ("20240102", "20991231"):
+        assert _jobs_fired(spark, lambda: got.append(dqio.partition_exists(df, "dt_foto", value))) <= 1
+    assert got == [True, False]
+
+
+def test_read_path_declared_schema_no_job(spark, tmp_path):
+    from dq.schema import DQ_VOLUMETRIA
+
+    p = str(tmp_path / "hist")
+    rows = [("db", "t", "20240101", "20260101", 7, "1")]
+    dqio.literal_frame(spark, rows, DQ_VOLUMETRIA).write.parquet(p)
+    frames = []
+    assert _jobs_fired(spark, lambda: frames.append(dqio.read_path(spark, p, default_schema=DQ_VOLUMETRIA))) == 0
+    assert frames[0].dtypes == [(f.name, f.dataType.simpleString()) for f in DQ_VOLUMETRIA.fields]
+    assert [tuple(r) for r in frames[0].collect()] == rows
+
+
+def test_literal_frame_matches_python_rows(spark):
+    """Same names, types and rows as the Python-list frame (NULLs in
+    nullable fields, zero rows), and no scan of a Python RDD."""
+    from dq.pipeline import LINEAGE_SCHEMA_DDL
+    from dq.schema import DQ_DUPLICADOS, DQ_FAILURES, DQ_VOLUMETRIA
+
+    cases = [
+        (DQ_FAILURES, [("db", "t", "20240101", None, "1", 0), ("db", "u", "20240102", "dt", None, 1)]),
+        (DQ_VOLUMETRIA, [("db", "t", "20240101", "20260101", None, None)]),
+        (DQ_DUPLICADOS, [("db", "t", "20240101", "20260101", 5, 4, 1, "2"), ("db", "t", "20240102", "20260101", None, None, None, None)]),
+        (LINEAGE_SCHEMA_DDL, [(10, 7, 3, 1, 2, None, "20260101", 1, "20240101")]),
+    ]
+    cases += [(schema, []) for schema, _ in cases]
+    for schema, rows in cases:
+        got = dqio.literal_frame(spark, rows, schema)
+        want = spark.createDataFrame(rows, schema)
+        assert got.dtypes == want.dtypes
+        assert got.collect() == want.collect()
+        assert "ExistingRDD" not in got._jdf.queryExecution().executedPlan().toString()
+
+
+def test_present_partition_check_job_budget(spark, tmp_path):
+    """One volumetria + duplicidade check of a present partition, as the CLI
+    runs it against existing history tables: 2 inference loads of the
+    monitored table, 2 probes, 3 jobs for volumetria and 4 for duplicidade."""
+    from dq import dupcheck, volumetry
+
+    data = _lake(spark, str(tmp_path / "lake"))
+    hist_v, hist_d = str(tmp_path / "vol"), str(tmp_path / "dup")
+    day, old = "20240102", "20240101"
+
+    def check(day):
+        monitored = dqio.read_path(spark, data)
+        history = dqio.read_path(spark, hist_v, default_schema=volumetry.DQ_VOLUMETRIA)
+        new_hist, failure = volumetry.collect_volumetria(spark, monitored, history, "db", "t", day, "dt_foto")
+        assert failure is None
+        dqio.overwrite_table(new_hist, hist_v)
+        monitored = dqio.read_path(spark, data)
+        assert dqio.partition_exists(monitored, "dt_foto", day)
+        aux = dupcheck.dup_metric_row(monitored, "db", "t", day, partition_expr="dt_foto")
+        hist = dqio.read_path(spark, hist_d, default_schema=dupcheck.DQ_DUPLICADOS)
+        dqio.overwrite_table(dupcheck.consolidate(hist, aux), hist_d)
+
+    check(old)  # the history tables now exist
+    assert _jobs_fired(spark, lambda: check(day)) <= 11
+    vol = {(r.dt_foto, r.qtde_registros) for r in spark.read.parquet(hist_v).collect()}
+    dup = {(r.dt_foto, r.qtde1, r.qtde2, r.diferenca) for r in spark.read.parquet(hist_d).collect()}
+    assert vol == {(old, 25), (day, 25)}
+    assert dup == {(old, 25, 20, 5), (day, 25, 20, 5)}
+
+
 def test_manifest_resume(tmp_path):
     mpath = str(tmp_path / "m.json")
     m = dqio.CheckpointManifest(mpath)

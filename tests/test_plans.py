@@ -38,17 +38,24 @@ def test_dup_counts_single_scan(spark):
     assert simple_plan_of(dup_counts_two_scan(df)).count("Scan parquet") == 2
 
 
-def test_merge_history_broadcasts_fresh_side(spark):
-    """The per-run fresh row must broadcast — the history table never
-    shuffles for the upsert."""
-    from dq import volumetry
+def test_merge_history_one_keyed_exchange(spark, tmp_path):
+    """The history merge is a keyed supersede: no join, and exactly one
+    exchange above its inputs, hash-partitioned on the merge keys (the
+    distinct reuses it)."""
+    from dq import io as dqio, volumetry
+    from dq.schema import DQ_VOLUMETRIA
 
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    hist = volumetry.empty_history(spark)
-    fresh = volumetry.measure_row(ev, "db", "ev", "20240101", "date_format(ts,'yyyyMMdd')")
-    plan = plan_of(volumetry.merge_history(hist, fresh))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
+    rows = [("db", "t", "20240101", "20260101", 7, "1"), ("db", "t", "20240102", "20260101", 8, "1")]
+    p = str(tmp_path / "hist")
+    dqio.literal_frame(spark, rows, DQ_VOLUMETRIA).write.parquet(p)
+    hist = dqio.read_path(spark, p, default_schema=DQ_VOLUMETRIA)
+    fresh = dqio.literal_frame(spark, rows[:1], DQ_VOLUMETRIA)
+    plan = simple_plan_of(volumetry.merge_history(hist, fresh))
+    assert "Join" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    args = re.search(r"Exchange hashpartitioning\(([^)]*)\)", plan).group(1)
+    keys = [re.sub(r"#\d+$", "", a.strip()) for a in args.split(",")[:-1]]
+    assert keys == volumetry.MERGE_KEYS, plan
 
 
 def test_enrich_has_single_wide_op(spark):

@@ -63,6 +63,44 @@ def test_merge_null_safe_keys(spark):
     assert len(out) == 1 and out[0].qtde_registros == 9
 
 
+def _py_supersede(hist, fresh, nkeys=4):
+    """Pure-Python keyed supersede: history rows whose key (None == None)
+    has a fresh row are dropped, then history + fresh, distinct."""
+    fresh_keys = {r[:nkeys] for r in fresh}
+    return sorted({r for r in hist if r[:nkeys] not in fresh_keys} | set(fresh), key=repr)
+
+
+def test_merge_history_matches_python_supersede(spark):
+    """Planted cases: NULL keys, duplicate history rows, a fresh side with a
+    repeated key, and one fresh key superseding several history rows."""
+    from dq.io import literal_frame
+
+    ddl = "banco string, tabela string, dt_foto string, dt_processamento string, qtde_registros long, fonte string"
+    hist = [
+        ("db", None, "20240101", "p0", 7, "1"),  # NULL key, superseded
+        ("db", None, "20240102", "p0", 3, "1"),  # NULL key, survives
+        ("db", "t", "20240101", "p0", 5, "1"),  # duplicate history rows
+        ("db", "t", "20240101", "p0", 5, "1"),
+        ("db", "t", "20240103", "p0", 1, "1"),  # one key, several history rows,
+        ("db", "t", "20240103", "p0", 2, "2"),  # all superseded by one fresh row
+        ("db", "t", "20240103", "p0", None, None),
+        ("db", "u", "20240101", "p0", 4, "1"),  # superseded by a repeated fresh key
+    ]
+    fresh = [
+        ("db", None, "20240101", "p0", 9, "2"),
+        ("db", "t", "20240103", "p0", 10, "2"),
+        ("db", "u", "20240101", "p0", 11, "2"),
+        ("db", "u", "20240101", "p0", 12, "3"),
+        ("db", "u", "20240101", "p0", 12, "3"),
+        ("db", "v", "20240101", "p0", 13, "2"),  # new key
+    ]
+    got = volumetry.merge_history(
+        literal_frame(spark, hist, ddl), literal_frame(spark, fresh, ddl)
+    ).collect()
+    assert sorted(map(tuple, got), key=repr) == _py_supersede(hist, fresh)
+    assert len(got) == 7
+
+
 # ---- robust anomaly flags ---------------------------------------------------
 
 
