@@ -182,11 +182,11 @@ HEADLINE = [
     # near_dup_clusters: it is iterative (8 argmax-collect rounds over the
     # small vocab frame), so local wall time measures per-job fixed
     # overhead, not engine throughput — pytest pins it to the python trainer.
-    # near_dup_clusters / near_dup_clusters_star stay OUT of the headline:
-    # both are iterative (several Spark jobs of convergence checks over the
-    # small planted pair graph), so local wall time measures per-job fixed
-    # overhead, not engine throughput — the gate + pytest own their
-    # correctness, the alternation-count test owns the O(log n) claim.
+    # near_dup_clusters stays OUT of the headline: it is iterative (one
+    # eager checkpoint per large-star/small-star round over the small
+    # planted pair graph), so local wall time measures per-job fixed
+    # overhead, not engine throughput — the gate + pytest own its
+    # correctness, the 1000-chain test owns the round bound.
 ]
 
 

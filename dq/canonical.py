@@ -17,14 +17,15 @@ as terminal (the target wasn't crawled — it still becomes the dedup key).
 Scale shape (100 TB notes): each round is ONE self equi-join of the narrow
 (doc_id, ptr, depth) frame — 24 B/row — followed by localCheckpoint (the
 iterative-loop lineage lesson, CLAUDE.md: persist alone doubles the logical
-plan per round and analysis goes exponential). Round count is logarithmic in
-the deepest chain; non-convergence past ``max_iter`` raises loudly instead
-of returning partial roots.
+plan per round and analysis goes exponential). The round's moved-pointer
+count is an ``Observation`` on that checkpoint, not a separate count job.
+Round count is logarithmic in the deepest chain; non-convergence past
+``max_iter`` raises loudly instead of returning partial roots.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 # ---- shared constants (dq.oracles generates SQL from these) ----------------
@@ -62,6 +63,7 @@ def resolve_canonical(edges: DataFrame, max_iter: int = 20) -> DataFrame:
             F.col("ptr").alias("_ptr2"),
             F.col("depth").alias("_d2"),
         )
+        moved = Observation()
         nxt = (
             cur.join(hop, "ptr", "left")
             .select(
@@ -72,11 +74,13 @@ def resolve_canonical(edges: DataFrame, max_iter: int = 20) -> DataFrame:
                     "_moved"
                 ),
             )
+            .observe(moved, F.count_if("_moved").alias("n"))
             .localCheckpoint()
         )
-        moved = nxt.where("_moved").count()
         cur = nxt.drop("_moved")
-        if moved == 0:
+        # only zero/non-zero is read: a retried task counted twice cannot
+        # change the decision
+        if moved.get["n"] == 0:
             return cur.select(
                 "doc_id", F.col("ptr").alias("root_id"), "depth"
             )

@@ -34,8 +34,8 @@ Scale shapes (100 TB notes):
 - The update step posexplodes to (cid, pos, component) — k*dim-keyed
   uniform agg with map-side partials; its exchange is tiny.
 - KM_ITERS is a small constant (2): the lineage stays shallow, no
-  checkpoint needed (contrast dq/dedup.connected_components, which must
-  localCheckpoint its unbounded loop).
+  checkpoint needed (contrast dq/dedup.connected_components_star, which
+  must localCheckpoint its unbounded loop).
 - SemDeDup's intra-cluster pairwise join is equi on (cluster id, sub-split);
   cost is sum(c_i^2) with every c_i <= SEMDEDUP_MAX_CLUSTER — at LAION
   scale the paper runs 50k clusters so per-cluster work stays fixed, and
@@ -147,7 +147,7 @@ def kmeans_assign(
         # localCheckpoint each round: the centroid frame is k rows, but its
         # lineage contains every previous round — without the cut, each
         # broadcast build re-executes the whole prior chain (measured 3x
-        # wall at sf0.1; same lesson as dedup.connected_components).
+        # wall at sf0.1; same lesson as dedup.connected_components_star).
         cents = _update(_assign(base, cents, dim)).localCheckpoint()
     return _assign(base, cents, dim).select(
         F.col("_id").alias("vec_id"),

@@ -2070,11 +2070,11 @@ FROM g
 
 def _near_dup_cc_ctes() -> str:
     """Shared recursive-CTE chain (jp → edges → verts → reach → cc) — the
-    connected-components twin of dq.dedup.connected_components over the
-    verified pair graph (cluster id = min reachable vertex id; edge set
+    connected-components twin of dq.dedup.connected_components_star over
+    the verified pair graph (cluster id = min reachable vertex id; edge set
     identical because the jaccard doubles are bit-identical cross-engine).
-    Reused by near_dup_clusters(_star) AND near_dup_survivors so the
-    cluster math is generated once, never hand-duplicated."""
+    Reused by near_dup_clusters AND near_dup_survivors so the cluster math
+    is generated once, never hand-duplicated."""
     thresh = repr(NEAR_CLUSTER_MIN_JACCARD)
     return f"""jp AS ({_ngram_jaccard_sql()}),
 edges AS (
@@ -2447,7 +2447,7 @@ FROM base GROUP BY text
 """,
     "ngram_jaccard_pairs": _ngram_jaccard_sql(),
     # connected components over the verified pair graph — recursive CTE
-    # twin of the engine's iterative min-label propagation (shared CTE
+    # twin of the engine's large-star/small-star alternation (shared CTE
     # chain, see _near_dup_cc_ctes)
     "near_dup_clusters": f"""
 WITH RECURSIVE {_near_dup_cc_ctes()}
@@ -2568,11 +2568,6 @@ SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rank, score FROM r WHERE rnk <
     "winnow_dup_pairs": _winnow_dup_pairs_sql(),
     "canonical_chains": _canonical_chains_sql(),
 }
-
-# round-5 addition: the large-star/small-star CC variant labels every
-# vertex with the SAME min-vertex-id as min-label propagation (proven in
-# tests/test_dedup.py), so the recursive-CTE oracle is shared verbatim.
-ORACLES["near_dup_clusters_star"] = ORACLES["near_dup_clusters"]
 
 # round-5 addition: survivor pick per near-dup family (longest wins, ties
 # to the lowest doc_id) — composes the shared cluster CTE chain with the

@@ -128,7 +128,7 @@ def pq_train(
         )
     for _ in range(iters):
         # localCheckpoint per round — same lineage-doubling lesson as
-        # dq.clustering.kmeans_assign / dedup.connected_components.
+        # dq.clustering.kmeans_assign / dedup.connected_components_star.
         cents = _update(_assign(subs, cents)).localCheckpoint()
     return cents
 

@@ -1039,31 +1039,13 @@ NEAR_CLUSTER_MIN_JACCARD = 0.7
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup CLUSTERS over the verified pair graph: the
     planted pairs' exact n-gram Jaccard (already oracled math) filtered at
-    >= 0.7, then connected components via iterative min-label propagation
-    (dq.dedup.connected_components); cluster id = min doc_id of the
-    component. A doc with both an exact and a near copy forms one 3-doc
-    cluster — the tier survivor selection needs (pairs alone would dedup
-    transitively-linked docs as independent edges). DuckDB reproduces the
-    components with a recursive CTE: an ORACLED iterative algorithm."""
-    from dq.dedup import connected_components
-
-    pairs = ngram_jaccard_pairs(spark, sf_dir).where(
-        F.col("jaccard") >= NEAR_CLUSTER_MIN_JACCARD
-    )
-    cc = connected_components(pairs)
-    return cc.select(
-        F.col("id").cast("bigint").alias("doc_id"),
-        F.col("comp").cast("bigint").alias("cluster_id"),
-    )
-
-
-def near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The O(log n) large-star/small-star connected-components variant
-    (Kiveris et al. 2014; dq.dedup.connected_components_star) over the SAME
-    verified pair graph as near_dup_clusters — gate-wired so the deep-chain
-    scale path is DuckDB-oracled, not just pytest-verified (VERDICT r4
-    next-#4). Both variants label every vertex with the component's minimum
-    doc_id, so the recursive-CTE oracle is shared verbatim."""
+    >= 0.7, then connected components via the polylog-round
+    large-star/small-star alternation (dq.dedup.connected_components_star);
+    cluster id = min doc_id of the component. A doc with both an exact and a
+    near copy forms one 3-doc cluster — the tier survivor selection needs
+    (pairs alone would dedup transitively-linked docs as independent
+    edges). DuckDB reproduces the components with a recursive CTE: an
+    ORACLED iterative algorithm."""
     from dq.dedup import connected_components_star
 
     pairs = ngram_jaccard_pairs(spark, sf_dir).where(
@@ -3478,7 +3460,6 @@ QUERIES = {
     "winnow_dup_pairs": winnow_dup_pairs,
     "canonical_chains": canonical_chains,
     # round-5 additions APPENDED (same sampler-stability rule as above)
-    "near_dup_clusters_star": near_dup_clusters_star,
     "bpe_pair_counts": bpe_pair_counts,
     "bpe_merge_table": bpe_merge_table,
     "bpe_token_fertility": bpe_token_fertility,

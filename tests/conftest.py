@@ -29,3 +29,17 @@ def pages(spark, pages_pdf):
     df = spark.createDataFrame(pages_pdf, schema=PAGES).cache()
     df.count()
     return df
+
+
+def jobs_fired(spark, action) -> int:
+    """Spark jobs ``action`` fires, by job id from the status tracker after
+    the listener bus drains."""
+    sc = spark.sparkContext
+
+    def ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = ids()
+    action()
+    return len(ids() - before)

@@ -5,6 +5,7 @@ import os
 from pyspark.sql import functions as F
 
 from dq import io as dqio
+from tests.conftest import jobs_fired
 
 
 def test_overwrite_then_read_back(spark, tmp_path):
@@ -132,20 +133,6 @@ def test_partition_values_and_exists(spark):
     assert not dqio.partition_exists(df, "p", "9")
 
 
-def _jobs_fired(spark, action) -> int:
-    """Spark jobs ``action`` fires, by job id from the status tracker after
-    the listener bus drains."""
-    sc = spark.sparkContext
-
-    def ids():
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return set(sc.statusTracker().getJobIdsForGroup(None))
-
-    before = ids()
-    action()
-    return len(ids() - before)
-
-
 def _lake(spark, root):
     """A table hive-partitioned on dt_foto (20240101..03), one file per
     partition; each day has 25 rows, 20 distinct."""
@@ -160,7 +147,7 @@ def test_partition_exists_one_job(spark, tmp_path):
     # a value pruning removes still plans one empty scan partition: one
     # 1-task job that reads no file
     for value in ("20240102", "20991231"):
-        assert _jobs_fired(spark, lambda: got.append(dqio.partition_exists(df, "dt_foto", value))) <= 1
+        assert jobs_fired(spark, lambda: got.append(dqio.partition_exists(df, "dt_foto", value))) <= 1
     assert got == [True, False]
 
 
@@ -171,7 +158,7 @@ def test_read_path_declared_schema_no_job(spark, tmp_path):
     rows = [("db", "t", "20240101", "20260101", 7, "1")]
     dqio.literal_frame(spark, rows, DQ_VOLUMETRIA).write.parquet(p)
     frames = []
-    assert _jobs_fired(spark, lambda: frames.append(dqio.read_path(spark, p, default_schema=DQ_VOLUMETRIA))) == 0
+    assert jobs_fired(spark, lambda: frames.append(dqio.read_path(spark, p, default_schema=DQ_VOLUMETRIA))) == 0
     assert frames[0].dtypes == [(f.name, f.dataType.simpleString()) for f in DQ_VOLUMETRIA.fields]
     assert [tuple(r) for r in frames[0].collect()] == rows
 
@@ -220,7 +207,7 @@ def test_present_partition_check_job_budget(spark, tmp_path):
         dqio.overwrite_table(dupcheck.consolidate(hist, aux), hist_d)
 
     check(old)  # the history tables now exist
-    assert _jobs_fired(spark, lambda: check(day)) <= 11
+    assert jobs_fired(spark, lambda: check(day)) <= 11
     vol = {(r.dt_foto, r.qtde_registros) for r in spark.read.parquet(hist_v).collect()}
     dup = {(r.dt_foto, r.qtde1, r.qtde2, r.diferenca) for r in spark.read.parquet(hist_d).collect()}
     assert vol == {(old, 25), (day, 25)}

@@ -410,6 +410,16 @@ def test_canonical_deep_chain_logarithmic(spark):
     assert out.where(f"doc_id = {n - 1}").collect()[0]["depth"] == n - 1
 
 
+def test_canonical_planted_job_budget(spark):
+    """Each doubling round's moved-pointer count is observed on the round's
+    own checkpoint, so 5000 planted docs (4 rounds) fire no count jobs."""
+    from dq.canonical import planted_canonical_edges, resolve_canonical
+    from tests.conftest import jobs_fired
+
+    edges = planted_canonical_edges(spark.range(5000).withColumnRenamed("id", "doc_id"))
+    assert jobs_fired(spark, lambda: resolve_canonical(edges).count()) <= 17  # 25 with a count job per round
+
+
 def test_canonical_content_audit_groups(spark):
     """Audit semantics on the planted chains: every group's n_pages equals
     its chain length (CANON_CHAIN_MOD runs, truncated at the corpus edge),

@@ -73,7 +73,6 @@ TEXT_QUERIES = [
     "winnow_dup_pairs",
     "paragraph_bloom_dedup",
     "dup_cluster_histogram",
-    "near_dup_clusters_star",
     "bpe_pair_counts",
     "bpe_token_fertility",
     "unimax_lang_budget",
