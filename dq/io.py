@@ -639,7 +639,7 @@ class CheckpointManifest:
 
         self.path = path
         self._done: set[str] = set()
-        self._lock = threading.Lock()  # parallel partition fan-out (C4)
+        self._lock = threading.Lock()  # callers may mark from several threads
         if os.path.exists(path):
             with open(path) as f:
                 self._done = set(json.load(f))

@@ -476,6 +476,53 @@ def test_run_ts_range_predicate_pushes_to_scan(spark, pages, tmp_path):
     assert "LessThan(warc_ts" in plan
 
 
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_run_lineage_observed_in_write_result_stage(spark, pages, tmp_path, monkeypatch, broadcast):
+    """pipeline.run observes its lineage counts on the kept write. Spark
+    applies result-stage accumulator updates once per partition, but a
+    retried MAP stage would count its rows twice: no Exchange may sit
+    between CollectMetrics and the write, on either dedup join path. The
+    observation's width is the aggregate set times the PENDING labels: a
+    resume with 1 of 4 labels pending observes one set, not four."""
+    import functools
+    import json
+
+    from dq import pipeline
+
+    monkeypatch.setattr(
+        pipeline, "enrich", functools.partial(pipeline.enrich, dedup_broadcast=broadcast)
+    )
+    out = str(tmp_path / "o")
+    pipeline.run(spark, pages, out)
+    done = sorted(json.load(open(f"{out}/manifest.json")))
+    assert len(done) == 4
+    json.dump(done[:-1], open(f"{out}/manifest.json", "w"))
+    pipeline.run(spark, pages, out)
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    plans = []
+    while it.hasNext():
+        plans.append(it.next().physicalPlanDescription())
+    plan = [p for p in plans if "CollectMetrics" in p][-1]
+    # the first tree listed is the AQE final plan; walk up from the node
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if _tree_node(ln)[1].startswith("CollectMetrics"))
+    col, ancestors = _tree_node(lines[at])[0], []
+    for ln in reversed(lines[:at]):
+        c, text = _tree_node(ln)
+        if text and c < col:
+            ancestors.append(text.lstrip("* "))
+            col = c
+    assert any(a.startswith("Execute InsertIntoHadoopFsRelationCommand") for a in ancestors), plan
+    assert not any(a.startswith(("Exchange", "ShuffleQueryStage", "AQEShuffleRead")) for a in ancestors), plan
+    if not broadcast:
+        assert "ShuffledHashJoin" in plan  # the shuffle path sits below the node
+    metrics = re.search(r"^\(\d+\) CollectMetrics\n.*\nArguments: (.*)$", plan, re.M).group(1)
+    assert metrics.count(" AS n_") == len(pipeline._lineage_counts(pages))  # × 1 pending label
+
+
 def test_doc_chunks_no_exchange(spark):
     """Chunking is a pure per-partition explode — zero shuffles."""
     from dq.sampling import chunk_docs
