@@ -259,7 +259,8 @@ def run_headline(sf_dir: str, cpus: int) -> dict:
     passes: list[dict[str, float]] = []
     for _ in range(3):
         # drop every cached fragment between passes: queries that persist()
-        # internally (enrich auto-mode dup units) would otherwise have their
+        # internally (enrich auto-mode dup units, cached only when the scope
+        # holds more rows than the broadcast bound) would otherwise have their
         # pass-1 InMemoryRelation substituted into pass 2's identical plan,
         # and min() would systematically record the cache-hit time instead
         # of a host-noise-free real run

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dq.io import sql_literal
+
 # English stopword probe (language+quality signal, C4-style "contains common
 # words" rule). Shared by engine + oracle.
 STOPWORDS = [
@@ -25,6 +27,7 @@ STOPWORDS = [
 ]
 
 SYMBOL_CLASS = r"[#$%*@!^~]"
+_ALPHA_CLASS = "[A-Za-zÀ-ÿ]"
 
 # Rule thresholds (Gopher-flavored, tuned to the synthetic corpus; the point
 # is identical evaluation in engine and oracle, not the absolute values).
@@ -42,8 +45,34 @@ THRESHOLDS = {
 }
 
 
-def _words(text: Column) -> Column:
-    return F.filter(F.split(text, r"\s+"), lambda w: w != F.lit(""))
+def _ratio(num: str, den: str) -> str:
+    return f"CASE WHEN {den} > 0 THEN CAST({num} AS DOUBLE) / {den} ELSE 0.0D END"
+
+
+# SQL text of the staged token/line arrays and of each metric, generated
+# from the constants above: one py4j call per column, not per node
+_STAGES = [
+    {"_hm_words": "filter(split(_hm_text, %s), w -> w != '')" % sql_literal(r"\s+"),
+     "_hm_lines": "split(_hm_text, %s)" % sql_literal(r"\n")},
+    {"_hm_stop_hits": "filter(_hm_words, w -> array_contains(array(%s), lower(w)))"
+     % ", ".join(map(sql_literal, STOPWORDS))},
+]
+_N_WORDS, _N_CHARS, _N_LINES = "size(_hm_words)", "length(_hm_text)", "size(_hm_lines)"
+_METRICS = {
+    "n_chars_m": _N_CHARS,
+    "n_words_m": _N_WORDS,
+    "mean_word_len": _ratio("aggregate(_hm_words, 0, (acc, w) -> acc + length(w))", _N_WORDS),
+    "symbol_ratio": _ratio(
+        f"{_N_CHARS} - length(regexp_replace(_hm_text, {sql_literal(SYMBOL_CLASS)}, ''))", _N_CHARS
+    ),
+    "stop_ratio": _ratio("size(_hm_stop_hits)", _N_WORDS),
+    "n_distinct_stops": "size(array_distinct(transform(_hm_stop_hits, w -> lower(w))))",
+    "dup_line_ratio": _ratio(f"{_N_LINES} - size(array_distinct(_hm_lines))", _N_LINES),
+    "ellipsis_line_ratio": _ratio("size(filter(_hm_lines, l -> endswith(l, '...')))", _N_LINES),
+    "alpha_word_ratio": _ratio(
+        f"size(filter(_hm_words, w -> w RLIKE {sql_literal(_ALPHA_CLASS)}))", _N_WORDS
+    ),
+}
 
 
 def with_heuristic_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -55,86 +84,24 @@ def with_heuristic_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     keeps the two-Project split because the array exprs are non-cheap and
     multiply referenced.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    stops = F.array([F.lit(s) for s in STOPWORDS])
-    staged = (
-        df.withColumn("_hm_text", text)
-        .withColumn("_hm_words", _words(F.col("_hm_text")))
-        .withColumn("_hm_lines", F.split(F.col("_hm_text"), r"\n"))
-        .withColumn(
-            "_hm_stop_hits",
-            F.filter(F.col("_hm_words"), lambda w: F.array_contains(stops, F.lower(w))),
-        )
-    )
-    text = F.col("_hm_text")
-    words = F.col("_hm_words")
-    lines = F.col("_hm_lines")
-    stop_hits = F.col("_hm_stop_hits")
-    n_words = F.size(words)
-    n_chars = F.length(text)
-    word_chars = F.aggregate(words, F.lit(0), lambda acc, w: acc + F.length(w))
-    n_lines = F.size(lines)
-    n_symbols = F.length(text) - F.length(F.regexp_replace(text, SYMBOL_CLASS, ""))
-    alpha_words = F.filter(words, lambda w: w.rlike("[A-Za-zÀ-ÿ]"))
-    ell_lines = F.filter(lines, lambda l: l.endswith("..."))
-
-    return (
-        staged.withColumn("n_chars_m", n_chars)
-        .withColumn("n_words_m", n_words)
-        .withColumn(
-            "mean_word_len",
-            F.when(n_words > 0, word_chars.cast("double") / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "symbol_ratio",
-            F.when(n_chars > 0, n_symbols.cast("double") / n_chars).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "stop_ratio",
-            F.when(n_words > 0, F.size(stop_hits).cast("double") / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn("n_distinct_stops", F.size(F.array_distinct(F.transform(stop_hits, F.lower))))
-        .withColumn(
-            "dup_line_ratio",
-            F.when(
-                n_lines > 0,
-                (n_lines - F.size(F.array_distinct(lines))).cast("double") / n_lines,
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "ellipsis_line_ratio",
-            F.when(n_lines > 0, F.size(ell_lines).cast("double") / n_lines).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "alpha_word_ratio",
-            F.when(n_words > 0, F.size(alpha_words).cast("double") / n_words).otherwise(F.lit(0.0)),
-        )
-        .drop("_hm_text", "_hm_words", "_hm_lines", "_hm_stop_hits")
-    )
+    text = "coalesce(`%s`, '')" % text_col.replace("`", "``")
+    out = df.withColumn("_hm_text", F.expr(text))
+    for stage in [*_STAGES, _METRICS]:
+        out = out.withColumns({k: F.expr(v) for k, v in stage.items()})
+    return out.drop("_hm_text", "_hm_words", "_hm_lines", "_hm_stop_hits")
 
 
 def keep_expr(t: dict | None = None) -> Column:
-    """Boolean keep decision over the metric columns."""
-    t = t or THRESHOLDS
-    return (
-        (F.col("n_words_m") >= t["min_words"])
-        & (F.col("n_words_m") <= t["max_words"])
-        & (F.col("mean_word_len") >= t["min_mean_word_len"])
-        & (F.col("mean_word_len") <= t["max_mean_word_len"])
-        & (F.col("symbol_ratio") <= t["max_symbol_ratio"])
-        & (F.col("stop_ratio") >= t["min_stop_ratio"])
-        & (F.col("n_distinct_stops") >= t["min_distinct_stops"])
-        & (F.col("dup_line_ratio") <= t["max_dup_line_ratio"])
-        & (F.col("ellipsis_line_ratio") <= t["max_ellipsis_line_ratio"])
-        & (F.col("alpha_word_ratio") >= t["min_alpha_word_ratio"])
-    )
+    """Boolean keep decision over the metric columns: every rule of
+    :data:`RULE_DEFS` passes."""
+    return F.expr(" AND ".join(_rule_sql(t, passing=True).values()))
 
 
 # ---------------------------------------------------------------- oracle ---
 
 _WS = re.compile(r"\s+", re.ASCII)  # Java \s is ASCII-only; Python str \s is not
 _SYM = re.compile(SYMBOL_CLASS)
-_ALPHA = re.compile(r"[A-Za-zÀ-ÿ]")
+_ALPHA = re.compile(_ALPHA_CLASS)
 _STOPSET = set(STOPWORDS)
 
 
@@ -201,13 +168,20 @@ RULE_DEFS: list[tuple[str, str, str, str]] = [
 # the Spark metric frame spells word count n_words_m (with_heuristic_metrics);
 # the oracle CTE spells it n_words — map per consumer.
 SPARK_METRIC_COLS = {"n_words": "n_words_m"}
+_PASS_OP = {"<": ">=", ">": "<="}
+
+
+def _rule_sql(t: dict | None = None, passing: bool = False) -> dict[str, str]:
+    """rule -> SQL text of its failing (or, negated, passing) comparison."""
+    t = t or THRESHOLDS
+    return {
+        name: " ".join(
+            [SPARK_METRIC_COLS.get(metric, metric), _PASS_OP[op] if passing else op, sql_literal(t[thr])]
+        )
+        for name, metric, op, thr in RULE_DEFS
+    }
 
 
 def rule_fail_exprs(t: dict | None = None) -> dict[str, Column]:
     """rule -> boolean FAIL Column over with_heuristic_metrics columns."""
-    t = t or THRESHOLDS
-    ops = {"<": Column.__lt__, ">": Column.__gt__}
-    return {
-        name: ops[op](F.col(SPARK_METRIC_COLS.get(metric, metric)), F.lit(t[thr]))
-        for name, metric, op, thr in RULE_DEFS
-    }
+    return {name: F.expr(sql) for name, sql in _rule_sql(t).items()}

@@ -22,6 +22,7 @@ the documented drop-ins at each call site below.
 from __future__ import annotations
 
 import json
+import math
 import os
 import tempfile
 
@@ -56,27 +57,49 @@ def _recover_swap_debris(path: str) -> None:
         os.rename(final_tmp, path)
 
 
+def sql_literal(v, dtype=None) -> str:
+    """Spark-SQL text of ``v``, typed as ``F.lit(v)`` or cast to the DataType
+    ``dtype``: SQL text crosses py4j once per column, Columns once per node.
+    Strings escape ``\\``, ``'`` and ``$`` (the parser substitutes
+    ``${name}`` before it lexes quotes)."""
+    if v is None:
+        text = "NULL"
+    elif isinstance(v, bool):
+        text = "TRUE" if v else "FALSE"
+    elif isinstance(v, int):
+        text = str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    elif isinstance(v, float):
+        text = f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+    else:
+        text = "'%s'" % str(v).replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return text if dtype is None else f"CAST({text} AS {dtype.simpleString()})"
+
+
 def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """Driver-known rows as a one-partition frame built in the JVM.
 
     ``schema`` is a StructType or a DDL string; each row is a tuple in its
     field order (``None`` for NULL). The rows become one ``inline`` of an
-    array of literal structs over a 1-row range (literals over a range, as
-    in ``queries.volumetria_gate_failure``). A frame made from a Python
-    list instead scans a pickled Python RDD, so even a 1-row control write
-    would start a Python worker.
+    array of literal structs over a 1-row range, one SQL expression. A
+    frame made from a Python list instead scans a pickled Python RDD, so
+    even a 1-row control write would start a Python worker.
     """
-    from pyspark.sql.types import ArrayType, StructField, StructType
+    from pyspark.sql.types import StructType
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    structs = [
-        F.struct(*[F.lit(v).cast(f.dataType) for v, f in zip(row, schema.fields)]) for row in rows
-    ]
+    structs = ", ".join(
+        "struct(%s)" % ", ".join(sql_literal(v, f.dataType) for v, f in zip(row, schema.fields))
+        for row in rows
+    )
     # the array cast names the fields and types the zero-row array<void>;
     # every field is nullable, as parquet writes it
-    row_type = StructType([StructField(f.name, f.dataType) for f in schema.fields])
-    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs).cast(ArrayType(row_type))))
+    row_type = ", ".join(
+        "`%s`: %s" % (f.name.replace("`", "``"), f.dataType.simpleString()) for f in schema.fields
+    )
+    return spark.range(0, 1, 1, 1).selectExpr(
+        f"inline(CAST(array({structs}) AS array<struct<{row_type}>>))"
+    )
 
 
 def read_path(spark: SparkSession, path: str, default_schema=None, fmt: str = "parquet") -> DataFrame:
@@ -651,9 +674,10 @@ class CheckpointManifest:
     def is_done(self, table: str, partition: str) -> bool:
         return self._key(table, partition) in self._done
 
-    def mark_done(self, table: str, partition: str) -> None:
+    def mark_done(self, table: str, *partitions: str) -> None:
+        """Mark ``partitions`` of ``table`` done in one manifest write."""
         with self._lock:
-            self._done.add(self._key(table, partition))
+            self._done.update(self._key(table, p) for p in partitions)
             d = os.path.dirname(self.path)
             if d:
                 os.makedirs(d, exist_ok=True)

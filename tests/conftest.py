@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from dq.session import get_spark
@@ -43,3 +45,23 @@ def jobs_fired(spark, action) -> int:
     before = ids()
     action()
     return len(ids() - before)
+
+
+def py4j_calls(spark, action) -> int:
+    """py4j commands the main thread sends to the JVM while ``action`` runs:
+    the driver's plan-build round trips. py4j's finalizer thread, which
+    releases Python-side references to JVM objects, is not counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, main, n = client.send_command, threading.main_thread(), 0
+
+    def counting(*args, **kwargs):
+        nonlocal n
+        n += threading.current_thread() is main
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        action()
+    finally:
+        del client.send_command
+    return n

@@ -176,11 +176,21 @@ def test_literal_frame_matches_python_rows(spark):
         (LINEAGE_SCHEMA_DDL, [(10, 7, 3, 1, 2, None, "20260101", 1, "20240101")]),
     ]
     cases += [(schema, []) for schema, _ in cases]
+    # SQL-text hazards: quotes and escapes, a comment marker, a variable
+    # reference the parser would substitute, a non-BMP character; special
+    # doubles; the int64 extremes
+    texts = ["it's", "back\\slash", "new\nline", "v\x0btab", "-- not a comment", "${x}",
+             "${spark.app.name}", "\U0001F600", "", "\\u0041", "\\'"]
+    doubles = [float("nan"), float("inf"), float("-inf"), -0.0, 5e-324]
+    longs = [-(2**63), 2**63 - 1]
+    rows = [(t, doubles[i % 5], longs[i % 2]) for i, t in enumerate(texts)]
+    cases.append(("s string, d double, n bigint", rows))
     for schema, rows in cases:
         got = dqio.literal_frame(spark, rows, schema)
         want = spark.createDataFrame(rows, schema)
         assert got.dtypes == want.dtypes
-        assert got.collect() == want.collect()
+        # repr tells -0.0 from 0.0 and compares NaN equal to itself
+        assert repr(got.collect()) == repr(want.collect())
         assert "ExistingRDD" not in got._jdf.queryExecution().executedPlan().toString()
 
 
@@ -222,6 +232,8 @@ def test_manifest_resume(tmp_path):
     m.mark_done("t", "b")
     m2 = dqio.CheckpointManifest(mpath)  # reload from disk
     assert m2.pending(units) == [("t", "a"), ("t", "c")]
+    m2.mark_done("t", "a", "c")  # several partitions, one manifest write
+    assert dqio.CheckpointManifest(mpath).pending(units + [("u", "a")]) == [("u", "a")]
 
 
 import pytest
