@@ -1557,15 +1557,17 @@ def _link_edges_ctes() -> str:
     """Edge-list CTEs for the webgraph twins: DuckDB rebuilds the pages'
     deterministic outlinks from the dq.webgraph constants (the Spark side
     mines them back out of the rendered html with a regexp — the oracle
-    checks the whole render→extract→aggregate chain)."""
+    checks the whole render→extract→aggregate chain). A NULL-text page
+    renders NULL html (dq.synth.render_html_col), so it has no outlinks."""
     from dq.webgraph import LINK_DOMAINS, LINK_HUB, LINK_MULTS
 
+    docs = "FROM documents WHERE text IS NOT NULL"
     selects = [
         f"SELECT source AS src_domain,"
         f" 'src' || CAST((doc_id * {m}) % {LINK_DOMAINS} AS VARCHAR) AS dst_domain"
-        f" FROM documents"
+        f" {docs}"
         for m in LINK_MULTS
-    ] + [f"SELECT source AS src_domain, 'src{LINK_HUB}' AS dst_domain FROM documents"]
+    ] + [f"SELECT source AS src_domain, 'src{LINK_HUB}' AS dst_domain {docs}"]
     union = "\n  UNION ALL\n  ".join(selects)
     return f"""links AS (
   {union}

@@ -142,12 +142,7 @@ def with_partition(df: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
 DEDUP_BROADCAST_MAX_UNITS = 10_000_000
 
 
-def _attach_dup_flag(
-    out: DataFrame,
-    scope: DataFrame,
-    dedup_broadcast: bool | str = "auto",
-    broadcast_max_units: int = DEDUP_BROADCAST_MAX_UNITS,
-) -> DataFrame:
+def _attach_dup_flag(out: DataFrame, scope: DataFrame) -> DataFrame:
     """Attach ``is_exact_dup`` to ``out`` from the narrow dedup pass over
     ``scope`` (a frame with text+url whose rows are a SUPERSET of ``out``'s
     — same frame normally; the full run input on crash-resume).
@@ -159,30 +154,28 @@ def _attach_dup_flag(
     wide side recomputes the fingerprint in-plan (narrow, no exchange), so
     a url carrying two different texts only loses its losing copy.
 
-    ``dedup_broadcast="auto"`` (default) broadcasts only under
-    ``broadcast_max_units`` (VERDICT r2 wrong-#1: broadcast-always does not
-    survive day-scale arithmetic). It first counts the scope's rows, which
-    bound the units: at or under the bound it broadcasts and caches
-    nothing. Only above it is the unit set persisted and counted (one
-    narrow pass), and it stays cached until the session ends — a service
-    issuing many such runs should `spark.catalog.clearCache()` between
-    them. True/False force the choice without a count. The non-broadcast
-    path hints shuffle_hash (the units side builds the hash map, no sort),
-    but the wide side still shuffles on (_fp, url), enriched row included:
-    url bucketing does not remove that exchange, as the join keys are not
-    all bucket keys (``spark.sql.requireAllClusterKeysForCoPartition``).
+    The join-back broadcasts only under ``DEDUP_BROADCAST_MAX_UNITS``, read
+    at call time (VERDICT r2 wrong-#1: broadcast-always does not survive
+    day-scale arithmetic). It first counts the scope's rows, which bound
+    the units: at or under the bound it broadcasts and caches nothing. Only
+    above it is the unit set persisted and counted (one narrow pass), and
+    it stays cached until the session ends — a service issuing many such
+    runs should `spark.catalog.clearCache()` between them. The
+    non-broadcast path hints shuffle_hash (the units side builds the hash
+    map, no sort), but the wide side still shuffles on (_fp, url), enriched
+    row included: url bucketing does not remove that exchange, as the join
+    keys are not all bucket keys
+    (``spark.sql.requireAllClusterKeysForCoPartition``).
     """
     from dq.dedup import fingerprint_col, non_survivor_units
 
     dup_units = non_survivor_units(scope, "text", "url").withColumn("_is_dup", F.lit(True))
-    use_broadcast = bool(dedup_broadcast)
-    if dedup_broadcast == "auto":
-        # the units are a subset of the scope's rows: the column-pruned row
-        # count bounds them without running the narrow pass
-        use_broadcast = scope.count() <= broadcast_max_units
-        if not use_broadcast:
-            dup_units = dup_units.persist()
-            use_broadcast = dup_units.count() <= broadcast_max_units
+    # the units are a subset of the scope's rows: the column-pruned row
+    # count bounds them without running the narrow pass
+    use_broadcast = scope.count() <= DEDUP_BROADCAST_MAX_UNITS
+    if not use_broadcast:
+        dup_units = dup_units.persist()
+        use_broadcast = dup_units.count() <= DEDUP_BROADCAST_MAX_UNITS
     dup_units = F.broadcast(dup_units) if use_broadcast else dup_units.hint("shuffle_hash")
     return (
         out.withColumn("_fp", fingerprint_col(F.col("text")))
@@ -196,17 +189,15 @@ def enrich(
     df: DataFrame,
     verify_extraction: bool = True,
     config: PipelineConfig | None = None,
-    dedup_broadcast: bool | str = "auto",
     dedup_scope: DataFrame | None = None,
-    broadcast_max_units: int = DEDUP_BROADCAST_MAX_UNITS,
 ) -> DataFrame:
     """All per-doc stages; returns input columns + metrics + decisions.
 
     ``dedup_scope`` widens the frame the exact-dup survivor pick runs over
     (default: ``df`` itself) — pipeline.run passes the FULL run input so a
     crash-resume whose pending set shrank still drops copies whose survivor
-    lives in an already-committed partition. The default ``"auto"`` dedup
-    gate counts that scope's rows eagerly (see :func:`_attach_dup_flag`).
+    lives in an already-committed partition. The dedup gate counts that
+    scope's rows eagerly (see :func:`_attach_dup_flag`).
     """
     cfg = config or PipelineConfig()
     out = with_partition(df)
@@ -214,27 +205,8 @@ def enrich(
         out = out.withColumn("text_extracted", extract_text_col(F.col("html"))).withColumn(
             "extraction_ok", F.col("text_extracted").eqNullSafe(F.col("text"))
         )
-    out = _native_stages(out, cfg)
-    if cfg.model_artifact is not None:
-        from dq.artifacts import nlp_udf_from_artifact
-
-        nlp = nlp_udf_from_artifact(df.sparkSession, cfg.model_artifact)(F.col("text"))
-    else:
-        nlp = nlp_udf(F.col("text"))
-    out = (
-        out.withColumn("_nlp", nlp)
-        .withColumn("lang_pred", F.col("_nlp.lang_pred"))
-        .withColumn("lang_margin", F.col("_nlp.lang_margin"))
-        .withColumn("ppl", F.col("_nlp.ppl"))
-        .drop("_nlp")
-    )
-    out = out.withColumns({
-        "keep_lang": F.expr(f"lang_pred = {sql_literal(cfg.target_lang)}" if cfg.target_lang else "TRUE"),
-        "keep_ppl": F.expr(f"ppl <= {sql_literal(cfg.max_perplexity)}"),
-    })
-    out = _attach_dup_flag(
-        out, dedup_scope if dedup_scope is not None else df, dedup_broadcast, broadcast_max_units
-    )
+    out = _nlp_gates(_native_stages(out, cfg), cfg)
+    out = _attach_dup_flag(out, dedup_scope if dedup_scope is not None else df)
     return out.withColumn(
         "keep", F.expr("keep_heuristic AND keep_lang AND keep_ppl AND NOT is_exact_dup")
     )
@@ -255,11 +227,34 @@ def _native_stages(out: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+def _nlp_gates(out: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The fused NLP UDF (``cfg.model_artifact``'s weights, or the in-module
+    ones) and the lang/ppl gates it feeds. Shared by :func:`enrich` and
+    dq.streaming.streaming_enrich, so a stream and a batch run with the
+    same config decide with the same weights."""
+    if cfg.model_artifact is not None:
+        from dq.artifacts import nlp_udf_from_artifact
+
+        nlp = nlp_udf_from_artifact(out.sparkSession, cfg.model_artifact)(F.col("text"))
+    else:
+        nlp = nlp_udf(F.col("text"))
+    out = (
+        out.withColumn("_nlp", nlp)
+        .withColumn("lang_pred", F.col("_nlp.lang_pred"))
+        .withColumn("lang_margin", F.col("_nlp.lang_margin"))
+        .withColumn("ppl", F.col("_nlp.ppl"))
+        .drop("_nlp")
+    )
+    return out.withColumns({
+        "keep_lang": F.expr(f"lang_pred = {sql_literal(cfg.target_lang)}" if cfg.target_lang else "TRUE"),
+        "keep_ppl": F.expr(f"ppl <= {sql_literal(cfg.max_perplexity)}"),
+    })
+
+
 def enrich_sql_only(
     df: DataFrame,
     config: PipelineConfig | None = None,
     dedup_scope: DataFrame | None = None,
-    dedup_broadcast: bool | str = "auto",
 ) -> DataFrame:
     """The UDF-free tier of :func:`enrich`: heuristics + scrub + exact-dedup
     gates only — every stage a native expression with a DuckDB twin, so the
@@ -269,7 +264,7 @@ def enrich_sql_only(
     perplexity) stack on top in :func:`enrich`."""
     cfg = config or PipelineConfig()
     out = _native_stages(with_partition(df), cfg)
-    out = _attach_dup_flag(out, dedup_scope if dedup_scope is not None else df, dedup_broadcast)
+    out = _attach_dup_flag(out, dedup_scope if dedup_scope is not None else df)
     return out.withColumn("keep", F.col("keep_heuristic") & ~F.col("is_exact_dup"))
 
 

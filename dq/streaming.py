@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dq.pipeline import PipelineConfig, nlp_udf, with_partition
+from dq.pipeline import PipelineConfig, kept_projection, with_partition
 from dq.schema import PAGES
 
 WATERMARK = "2 days"
@@ -46,25 +46,14 @@ def streaming_enrich(
     minus the window-based survivor pick. ``dedup=False`` yields a fully
     stateless plan (for complete-mode downstream aggregations)."""
     from dq.dedup import fingerprint_col
-    from dq.pipeline import _native_stages
+    from dq.pipeline import _native_stages, _nlp_gates
 
     cfg = config or PipelineConfig()
-    # the SQL-expressible chain is SHARED with batch enrich (_native_stages:
-    # heuristics + keep_heuristic + scrub + pii_found) — one definition, so
-    # threshold/wiring changes cannot drift between the two modes
-    out = _native_stages(with_partition(pages), cfg)
-    nlp = nlp_udf(F.col("text"))
-    out = (
-        out.withColumn("_nlp", nlp)
-        .withColumn("lang_pred", F.col("_nlp.lang_pred"))
-        .withColumn("ppl", F.col("_nlp.ppl"))
-        .drop("_nlp")
-    )
-    out = out.withColumn(
-        "keep_lang",
-        F.col("lang_pred") == F.lit(cfg.target_lang) if cfg.target_lang else F.lit(True),
-    )
-    out = out.withColumn("keep_ppl", F.col("ppl") <= F.lit(cfg.max_perplexity))
+    # the stage chain is SHARED with batch enrich (_native_stages:
+    # heuristics + keep_heuristic + scrub + pii_found; _nlp_gates: the
+    # configured model's fused UDF + lang/ppl gates) — one definition, so
+    # thresholds, wiring and weights cannot drift between the two modes
+    out = _nlp_gates(_native_stages(with_partition(pages), cfg), cfg)
     # the SHARED null-safe fingerprint: streaming hashes must join against
     # batch/ledger fingerprints (sha2 of NULL text would never match)
     out = out.withColumn("content_hash", fingerprint_col(F.col("text")))
@@ -106,10 +95,7 @@ def run_stream(
     """Kept docs to parquet, exactly-once via checkpointed file sink.
     ``available_now`` drains existing input then stops (the batch-parity
     test mode; continuous deployments pass False)."""
-    enriched = streaming_enrich(stream_pages(spark, in_path), config)
-    kept = enriched.where(F.col("keep")).select(
-        "url", "warc_ts", "dt_foto", F.col("text_scrubbed").alias("text"), "lang_pred"
-    )
+    kept = kept_projection(streaming_enrich(stream_pages(spark, in_path), config))
     writer = (
         kept.writeStream.format("parquet")
         .option("path", out_path)
@@ -172,11 +158,9 @@ def run_stream_with_ledger(
             # drop by (fingerprint, url) UNIT, not by url: a url that carries a
             # duplicate text AND unique text loses only the losing copy — same
             # semantics as the batch join-back (dq.dedup.non_survivor_units)
-            kept = (
+            kept = kept_projection(
                 batch_df.withColumn("_fp", fingerprint_col(F.col("text")))
                 .join(units, ["_fp", "url"], "left_anti")
-                .where(F.col("keep"))
-                .select("url", "warc_ts", "dt_foto", F.col("text_scrubbed").alias("text"), "lang_pred")
             )
             kept.write.mode("append").parquet(out_path)
             new_fps.write.mode("append").parquet(ledger_path)
@@ -260,11 +244,8 @@ def run_stream_with_neardup_ledger(
             # run_stream_with_ledger on identical input.
             prior = flags.where(F.col("neardup_prior")).select("url")
             losers = neardup_batch_losers(units).select(F.col("doc").alias("url"))
-            kept = (
-                batch_df.where(F.col("keep"))
-                .join(prior, "url", "left_anti")
-                .join(losers, "url", "left_anti")
-                .select("url", "warc_ts", "dt_foto", F.col("text_scrubbed").alias("text"), "lang_pred")
+            kept = kept_projection(
+                batch_df.join(prior, "url", "left_anti").join(losers, "url", "left_anti")
             )
             kept.write.mode("append").parquet(out_path)
             new_bands.write.mode("append").parquet(ledger_path)

@@ -1,10 +1,15 @@
-"""Shared fixtures: one local[8] session, deterministic synthetic pages."""
+"""Shared fixtures: one local[8] session, deterministic synthetic pages, and
+the session's query registry (every ``QUERIES`` entry built once)."""
 
 from __future__ import annotations
 
+import os
+import re
 import threading
+from typing import NamedTuple
 
 import pytest
+from pyspark.sql import DataFrame
 
 from dq.session import get_spark
 
@@ -65,3 +70,86 @@ def py4j_calls(spark, action) -> int:
     finally:
         del client.send_command
     return n
+
+
+class Built(NamedTuple):
+    """One registry entry: the query's frame, its executed-plan text and its
+    read set, the (table, column) pairs its file scans read."""
+
+    frame: DataFrame
+    plan: str
+    reads: frozenset[tuple[str, str]]
+
+
+# a file scan's location and, on the same line (executed-plan text) or a
+# later one (the status store's formatted plan), its read schema
+_SCAN = re.compile(r"Location: [^\[\n]*\[([^\]\n]*)\].*?ReadSchema: struct<", re.S)
+
+
+def read_set(plan: str) -> set[tuple[str, str]]:
+    """(table, column) pairs of every file scan in ``plan``: the table is the
+    scanned path's basename without ``.parquet``, the columns are the read
+    schema's top-level fields. A scan that reads no column (a row count)
+    contributes ``(table, "")``."""
+    out = set()
+    for m in _SCAN.finditer(plan):
+        tables = [
+            os.path.basename(p.strip().rstrip("/")).removesuffix(".parquet")
+            for p in m.group(1).split(",")
+        ]
+        fields, depth, start = [], 1, m.end()
+        for i in range(m.end(), len(plan)):
+            ch = plan[i]
+            if ch in "<(":
+                depth += 1
+            elif ch in ">)":
+                depth -= 1
+            if depth == 0 or (depth == 1 and ch == ","):
+                fields.append(plan[start:i].split(":", 1)[0])
+                start = i + 1
+            if depth == 0:
+                break
+        out |= {(t, f) for t in tables for f in fields}
+    return out
+
+
+@pytest.fixture(scope="session")
+def registry(spark) -> dict[str, Built]:
+    """Every ``QUERIES`` entry built once on sf0.001. The read set joins the
+    frame's executed plan with the plans of the SQL executions its build
+    fired (eager gates, ``localCheckpoint`` rounds, collects): some queries
+    scan their tables only there."""
+    from dq.queries import QUERIES
+
+    spark.catalog.clearCache()  # cached fragments can hide a plan's nodes
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution() -> int:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+    out = {}
+    for name, fn in QUERIES.items():
+        first = last_execution() + 1
+        frame = fn(spark, SF0001)
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        reads = read_set(plan)
+        for i in range(first, last_execution() + 1):
+            ex = store.execution(i)
+            if ex.isDefined():
+                reads |= read_set(ex.get().physicalPlanDescription())
+        out[name] = Built(frame, plan, frozenset(reads))
+    return out
+
+
+def assert_matches_oracle(sdf, odf) -> None:
+    """A Spark result (pandas) equals its DuckDB twin's: same row count, same
+    column names, same order-insensitive value hash."""
+    from tools.compare_oracle import frame_hash, normalize
+
+    s, o = normalize(sdf), normalize(odf)
+    assert len(s) == len(o)
+    assert sorted(s.columns) == sorted(o.columns)
+    assert frame_hash(s) == frame_hash(o)

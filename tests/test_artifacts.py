@@ -28,6 +28,21 @@ def test_default_artifact_roundtrip_matches_inmodule_udf(spark, pages, tmp_path)
     assert via == base and base
 
 
+def _swapped_artifact(path: str) -> tuple[str, str]:
+    """Save the default weights with two language profiles cross-wired and
+    an unk-only perplexity table (ppl = e^50 for every doc); returns the
+    two swapped languages."""
+    art = artifacts.default_artifact()
+    profs = art["langid"]["profiles"]
+    a, b = sorted(profs)[:2]
+    profs[a], profs[b] = profs[b], profs[a]
+    art["perplexity"]["bi"] = {}
+    art["perplexity"]["uni"] = {}
+    art["perplexity"]["unk"] = -50.0  # exp(50) >> any threshold
+    artifacts.save_artifact(path, art)
+    return a, b
+
+
 def test_swapped_artifact_changes_predictions_without_code_edits(
     spark, pages, tmp_path
 ):
@@ -38,16 +53,8 @@ def test_swapped_artifact_changes_predictions_without_code_edits(
 
     from dq.pipeline import PipelineConfig, enrich
 
-    art = artifacts.default_artifact()
-    profs = art["langid"]["profiles"]
-    langs = sorted(profs)
-    a, b = langs[0], langs[1]
-    profs[a], profs[b] = profs[b], profs[a]
-    art["perplexity"]["bi"] = {}
-    art["perplexity"]["uni"] = {}
-    art["perplexity"]["unk"] = -50.0  # exp(50) >> any threshold
     path = str(tmp_path / "swapped.json")
-    artifacts.save_artifact(path, art)
+    a, b = _swapped_artifact(path)
 
     base = enrich(pages).select("url", "lang_pred", "keep_ppl")
     swapped = enrich(pages, config=PipelineConfig(model_artifact=path)).select(
@@ -65,6 +72,31 @@ def test_swapped_artifact_changes_predictions_without_code_edits(
         expect = {a: b, b: a}.get(r.lang_pred, r.lang_pred)
         assert r.lang_swapped == expect, (r.url, r.lang_pred, r.lang_swapped)
         assert r.keep_ppl is False  # unk-only LM: ppl = e^50 for every doc
+
+
+def test_stream_swapped_artifact_changes_predictions_without_code_edits(
+    spark, pages, tmp_path
+):
+    """The streaming twin: run_stream decides with the configured weights
+    file, so its kept rows carry the predictions batch enrich makes with
+    the same config. Lang and ppl gates are open, so the swapped languages
+    reach the output."""
+    from dq import streaming
+    from dq.pipeline import PipelineConfig, enrich
+
+    path = str(tmp_path / "swapped.json")
+    a, b = _swapped_artifact(path)
+    cfg = PipelineConfig(model_artifact=path, target_lang=None, max_perplexity=float("inf"))
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    pages.drop("html").write.parquet(src)
+    streaming.run_stream(spark, src, out, str(tmp_path / "ck"), config=cfg).awaitTermination(120)
+
+    cols = ["url", "text", "lang_pred"]
+    batch = enrich(pages.drop("html"), verify_extraction=False, config=cfg)
+    want = set(map(tuple, batch.selectExpr("url", "text_scrubbed AS text", "lang_pred").collect()))
+    have = set(map(tuple, spark.read.parquet(out).select(cols).collect()))
+    assert have and have <= want
+    assert {r[2] for r in have} & {a, b}  # the swap reaches the kept rows
 
 
 def test_artifact_format_and_profile_validation(tmp_path):

@@ -1,26 +1,16 @@
 """Driver-contract gate: every query runs; oracle pairs hash-match at
 sf0.001 (the driver runs the same comparison at sf0.01)."""
 
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from __spark_entry__ import entry, oracle_sql, queries  # noqa: E402
-from dq.io import TABLES  # noqa: E402
-from tools.compare_oracle import frame_hash, normalize  # noqa: E402
-
-SF = "/root/testdata/sf0.001"
+from __spark_entry__ import entry, oracle_sql, queries
+from tests.conftest import SF0001, assert_matches_oracle
+from tools.compare_oracle import oracle_db
 
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return c
+    return oracle_db(SF0001)
 
 
 def test_entry_smoke(spark):
@@ -35,26 +25,13 @@ def test_every_query_has_impl():
 
 
 @pytest.mark.parametrize("name", sorted(queries()))
-def test_query_vs_oracle(spark, con, name):
-    sdf = queries()[name](spark, SF).toPandas()
+def test_query_vs_oracle(registry, con, name):
+    sdf = registry[name].frame.toPandas()
     sql = oracle_sql().get(name)
     if sql is None:
         assert sdf is not None  # rows-only contract: runs with stable schema
         return
     odf = con.execute(sql).df()
-    s, o = normalize(sdf), normalize(odf)
-    assert len(s) == len(o)
-    assert sorted(s.columns) == sorted(o.columns)
-    assert frame_hash(s) == frame_hash(o)
-
-
-def test_no_oracle_is_vacuously_empty(con):
-    """Every oracled query must produce >= 1 row at sf0.001: a pair where
-    both engines return zero rows hash-matches trivially and proves
-    nothing — this guard keeps the gate evidence non-vacuous."""
-    empty = [
-        name
-        for name, sql in oracle_sql().items()
-        if len(con.execute(sql).df()) == 0
-    ]
-    assert empty == [], f"vacuously-empty oracle results: {empty}"
+    # both engines returning no rows would hash-match and prove nothing
+    assert len(odf) > 0, f"{name}: the oracle returns no rows at sf0.001"
+    assert_matches_oracle(sdf, odf)

@@ -144,14 +144,15 @@ def test_run_resume_idempotent(spark, pages, tmp_path):
     assert kept.where(F.col("text").rlike(scrub.SCRUB_RULES[0][1])).count() == 0
 
 
-def test_enrich_dedup_shuffle_fallback_same_flags(spark, pages):
-    """dedup_broadcast=False (the beyond-broadcast-budget fallback) flags
-    exactly the same rows as the broadcast path."""
+def test_enrich_dedup_shuffle_fallback_same_flags(spark, pages, monkeypatch):
+    """The shuffle_hash join-back (above the broadcast bound) flags exactly
+    the same rows as the broadcast path."""
+    from dq import pipeline
+
     a = enrich(pages).select("url", "is_exact_dup").toPandas().sort_values("url").reset_index(drop=True)
-    b = (
-        enrich(pages, dedup_broadcast=False)
-        .select("url", "is_exact_dup").toPandas().sort_values("url").reset_index(drop=True)
-    )
+    monkeypatch.setattr(pipeline, "DEDUP_BROADCAST_MAX_UNITS", -1)
+    b = enrich(pages).select("url", "is_exact_dup").toPandas().sort_values("url").reset_index(drop=True)
+    spark.catalog.clearCache()  # the unit set the path above the bound persists
     pd.testing.assert_frame_equal(a, b)
 
 

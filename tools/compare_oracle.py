@@ -11,6 +11,7 @@ doubles kept bit-exact via repr). Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -46,15 +47,23 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+def oracle_db(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per table of ``sf_dir``; a table is a
+    parquet file or a directory of part files."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("compare")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_db(sf_dir)
     qs, os_ = queries(), oracle_sql()
     n_pass = n_fail = 0
     for name, fn in qs.items():
