@@ -3,6 +3,7 @@ the session's query registry (every ``QUERIES`` entry built once)."""
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import threading
@@ -16,10 +17,15 @@ from dq.session import get_spark
 SF0001 = "/root/testdata/sf0.001"
 
 
+def suite_session():
+    """The suite's one local[8] session (``getOrCreate``: the same session
+    whether a fixture or module-level code asks first)."""
+    return get_spark("dq-tests", master="local[8]", shuffle_partitions=8)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("dq-tests", master="local[8]", shuffle_partitions=8)
-    yield s
+    yield suite_session()
 
 
 @pytest.fixture(scope="session")
@@ -80,6 +86,14 @@ class Built(NamedTuple):
     plan: str
     reads: frozenset[tuple[str, str]]
 
+    def rows(self):
+        """The query's rows as pandas, collected through a fresh Dataset over
+        the frame's plan (the no-op ``select("*")`` plans away): run in
+        place, the frame would pin its execution state, broadcast relations
+        and AQE stages, for the rest of the session (~2.6 GB of live heap
+        over all 169 queries)."""
+        return self.frame.select("*").toPandas()
+
 
 # a file scan's location and, on the same line (executed-plan text) or a
 # later one (the status store's formatted plan), its read schema
@@ -113,14 +127,16 @@ def read_set(plan: str) -> set[tuple[str, str]]:
     return out
 
 
-@pytest.fixture(scope="session")
-def registry(spark) -> dict[str, Built]:
+@functools.cache
+def build_registry() -> dict[str, Built]:
     """Every ``QUERIES`` entry built once on sf0.001. The read set joins the
     frame's executed plan with the plans of the SQL executions its build
     fired (eager gates, ``localCheckpoint`` rounds, collects): some queries
-    scan their tables only there."""
+    scan their tables only there. Built on first call: at collection when
+    a parity module is collected, since its parameters are read sets."""
     from dq.queries import QUERIES
 
+    spark = suite_session()
     spark.catalog.clearCache()  # cached fragments can hide a plan's nodes
     bus = spark.sparkContext._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
@@ -142,6 +158,66 @@ def registry(spark) -> dict[str, Built]:
                 reads |= read_set(ex.get().physicalPlanDescription())
         out[name] = Built(frame, plan, frozenset(reads))
     return out
+
+
+@pytest.fixture(scope="session")
+def registry(spark) -> dict[str, Built]:
+    return build_registry()
+
+
+# what each adversarial parity corpus changes: a table name means rows
+# appended to that table, a (table, column) pair means that column's values
+# changed
+CORPUS_CHANGES = {
+    "null_text": {("documents", "text")},
+    "nasty_text": {"documents"},
+    "nasty_numeric": {"lineitem", "orders", "events"},
+    "nasty_temporal": {"events", "orders"},
+}
+
+
+def meets(reads, corpus: str) -> bool:
+    """Whether a query with read set ``reads`` reads what ``corpus`` changes."""
+    changes = CORPUS_CHANGES[corpus]
+    return any(t in changes or (t, c) in changes for t, c in reads)
+
+
+def pytest_generate_tests(metafunc):
+    """A parity module names its corpus in ``PARITY_CORPUS``; the ``name``
+    of its parity test runs over the oracled queries that meet that corpus.
+    Any other query would read only the gate's own inputs there."""
+    corpus = getattr(metafunc.module, "PARITY_CORPUS", None)
+    if corpus and "name" in metafunc.fixturenames:
+        from __spark_entry__ import oracle_sql
+
+        reg = build_registry()
+        metafunc.parametrize(
+            "name", [n for n in sorted(oracle_sql()) if meets(reg[n].reads, corpus)]
+        )
+
+
+def write_corpus(spark, out: str, changed: dict[str, DataFrame]):
+    """Write a parity corpus to ``out``: the ``changed`` tables as parquet,
+    the others linked to sf0.001. Returns DuckDB views over it."""
+    from dq.io import TABLES
+    from tools.compare_oracle import oracle_db
+
+    for t in TABLES:
+        if t in changed:
+            changed[t].coalesce(1).write.parquet(f"{out}/{t}.parquet")
+        else:
+            os.symlink(f"{SF0001}/{t}.parquet", f"{out}/{t}.parquet")
+    return oracle_db(out)
+
+
+def assert_pair_matches(spark, sf: str, con, name: str) -> None:
+    """Query ``name`` on the corpus at ``sf`` equals its DuckDB twin on the
+    same corpus (``con``)."""
+    from __spark_entry__ import oracle_sql, queries
+
+    assert_matches_oracle(
+        queries()[name](spark, sf).toPandas(), con.execute(oracle_sql()[name]).df()
+    )
 
 
 def assert_matches_oracle(sdf, odf) -> None:

@@ -26,7 +26,7 @@ def test_every_query_has_impl():
 
 @pytest.mark.parametrize("name", sorted(queries()))
 def test_query_vs_oracle(registry, con, name):
-    sdf = registry[name].frame.toPandas()
+    sdf = registry[name].rows()
     sql = oracle_sql().get(name)
     if sql is None:
         assert sdf is not None  # rows-only contract: runs with stable schema

@@ -6,38 +6,19 @@ central cross-engine determinism device; this suite feeds it the inputs
 the synthetic tables never contain: negative amounts, exact band-edge and
 half-cent boundary values, float-representation traps (19.99 is not 1999
 cents), tiny fractions, 1e13 magnitudes, and zero. Every oracled query
-reading lineitem/orders/events numerics must keep hash-parity. NULL
-numerics stay out of scope here (the gate tables declare them NOT-NULL-by
--construction; NULL text has its own suite).
+whose Spark plan reads lineitem, orders or events (derived from its read
+set, ``registry`` in tests/conftest.py) must keep hash-parity. NULL
+numerics stay out of scope here (the gate tables declare them
+NOT-NULL-by-construction; NULL text has its own suite).
 """
 
-import duckdb
+import datetime
+
 import pytest
 
-from __spark_entry__ import oracle_sql, queries
-from dq.io import TABLES
-from tools.compare_oracle import frame_hash, normalize
+from tests.conftest import SF0001, assert_pair_matches, write_corpus
 
-SF = "/root/testdata/sf0.001"
-
-NUM_QUERIES = [
-    "benford_price_audit",
-    "constraint_report",
-    "events_cube_report",
-    "events_in_value_ranges",
-    "orders_above_cust_avg",
-    "qualitativo_conditional_aggs",
-    "qualitativo_percentiles",
-    "qualitativo_price_bands",
-    "qualitativo_price_cohorts",
-    "qualitativo_profile_ratios",
-    "qualitativo_value_bands",
-    "remediation_flip",
-    "revenue_by_region",
-    "top_users_by_value",
-    "user_sessions",
-    "user_set_ops",
-]
+PARITY_CORPUS = "nasty_numeric"
 
 # adversarial amounts: band edges, half-cent boundaries, float traps,
 # negatives, zero, tiny, huge
@@ -49,67 +30,41 @@ NASTY_AMOUNTS = [
 
 
 @pytest.fixture(scope="module")
-def nasty_sf(spark, tmp_path_factory):
+def corpus(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("nastynum"))
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    od = spark.read.parquet(f"{SF}/orders.parquet")
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    li_rows = [
-        (9_000_000 + i, 1, 1, 1, 1.0, amt, 0.05, 0.01, "N", "O",
-         __import__("datetime").datetime(2024, 3, 1, 12, 0, 0))
-        for i, amt in enumerate(NASTY_AMOUNTS)
-    ]
+    ts = datetime.datetime(2024, 3, 1, 12, 0, 0)
     li_x = spark.createDataFrame(
-        li_rows,
+        [
+            (9_000_000 + i, 1, 1, 1, 1.0, amt, 0.05, 0.01, "N", "O", ts)
+            for i, amt in enumerate(NASTY_AMOUNTS)
+        ],
         "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
         " l_quantity double, l_extendedprice double, l_discount double,"
         " l_tax double, l_returnflag string, l_linestatus string,"
         " l_shipdate timestamp",
     )
-    od_rows = [
-        (9_000_000 + i, 1 + (i % 5), "O", amt,
-         __import__("datetime").datetime(2024, 3, 1, 12, 0, 0), "1-URGENT")
-        for i, amt in enumerate(NASTY_AMOUNTS)
-    ]
     od_x = spark.createDataFrame(
-        od_rows,
+        [
+            (9_000_000 + i, 1 + (i % 5), "O", amt, ts, "1-URGENT")
+            for i, amt in enumerate(NASTY_AMOUNTS)
+        ],
         "o_orderkey long, o_custkey long, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
     )
-    ev_rows = [
-        (9_000_000 + i, __import__("datetime").datetime(2024, 3, 1, 12, 0, 0),
-         7 + (i % 3), "purchase", amt, "{}")
-        for i, amt in enumerate(NASTY_AMOUNTS)
-    ]
     ev_x = spark.createDataFrame(
-        ev_rows,
+        [
+            (9_000_000 + i, ts, 7 + (i % 3), "purchase", amt, "{}")
+            for i, amt in enumerate(NASTY_AMOUNTS)
+        ],
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    li.unionByName(li_x).coalesce(1).write.parquet(f"{out}/lineitem.parquet")
-    od.unionByName(od_x).coalesce(1).write.parquet(f"{out}/orders.parquet")
-    ev.unionByName(ev_x).coalesce(1).write.parquet(f"{out}/events.parquet")
-    for t in TABLES:
-        if t not in ("lineitem", "orders", "events"):
-            spark.read.parquet(f"{SF}/{t}.parquet").write.parquet(f"{out}/{t}.parquet")
-    return out
+    changed = {
+        t: spark.read.parquet(f"{SF0001}/{t}.parquet").unionByName(x)
+        for t, x in (("lineitem", li_x), ("orders", od_x), ("events", ev_x))
+    }
+    return out, write_corpus(spark, out, changed)
 
 
-@pytest.fixture(scope="module")
-def nasty_con(nasty_sf):
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{nasty_sf}/{t}.parquet/*.parquet'"
-        )
-    return c
-
-
-@pytest.mark.parametrize("name", NUM_QUERIES)
-def test_nasty_numeric_query_vs_oracle(spark, nasty_sf, nasty_con, name):
-    sdf = queries()[name](spark, nasty_sf).toPandas()
-    odf = nasty_con.execute(oracle_sql()[name]).df()
-    s, o = normalize(sdf), normalize(odf)
-    assert len(s) == len(o)
-    assert sorted(s.columns) == sorted(o.columns)
-    assert frame_hash(s) == frame_hash(o)
+def test_nasty_numeric_query_vs_oracle(spark, corpus, name):
+    assert_pair_matches(spark, *corpus, name)

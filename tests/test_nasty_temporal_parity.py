@@ -3,7 +3,8 @@ axis (gate corpus / NULL text / adversarial unicode / adversarial
 numerics) covering the date-arithmetic tier: pre-epoch and epoch-zero
 instants, a year-1900 row, a far-future year-2200 row (inside parquet's
 int64-nanosecond range), a leap day, and a year boundary. Every oracled
-query reading events.ts or orders.o_orderdate must keep hash-parity —
+query whose Spark plan reads events or orders (derived from its read set,
+``registry`` in tests/conftest.py) must keep hash-parity —
 strftime/date_format, datediff day-frames, sessionization gaps, windows,
 and as-of joins all cross this surface. Session TZ is pinned UTC on both
 engines (dq.session), which is what makes the instants comparable.
@@ -11,34 +12,11 @@ engines (dq.session), which is what makes the instants comparable.
 
 import datetime
 
-import duckdb
 import pytest
 
-from __spark_entry__ import oracle_sql, queries
-from dq.io import TABLES
-from tools.compare_oracle import frame_hash, normalize
+from tests.conftest import SF0001, assert_pair_matches, write_corpus
 
-SF = "/root/testdata/sf0.001"
-
-TEMPORAL_QUERIES = [
-    "active_user_windows",
-    "anchor_left_join",
-    "asof_latest_order",
-    "event_funnel",
-    "events_cube_report",
-    "events_moving_windows",
-    "events_pivot_daily",
-    "junta_consolidate",
-    "recrawl_schedule",
-    "remediation_flip",
-    "retention_cohorts",
-    "revenue_by_region",
-    "user_sessions",
-    "volumetria_gate_failure",
-    "volumetria_partition_counts",
-    "volumetria_recent_by_type",
-    "volumetry_anomaly",
-]
+PARITY_CORPUS = "nasty_temporal"
 
 NASTY_TS = [
     datetime.datetime(1969, 12, 31, 23, 59, 59),   # pre-epoch
@@ -51,10 +29,8 @@ NASTY_TS = [
 
 
 @pytest.fixture(scope="module")
-def nasty_sf(spark, tmp_path_factory):
+def corpus(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("nastyts"))
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    od = spark.read.parquet(f"{SF}/orders.parquet")
     ev_x = spark.createDataFrame(
         [(8_000_000 + i, t, 3, "purchase", 10.0, "{}") for i, t in enumerate(NASTY_TS)],
         "event_id long, ts timestamp, user_id long, event_type string,"
@@ -65,29 +41,12 @@ def nasty_sf(spark, tmp_path_factory):
         "o_orderkey long, o_custkey long, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
     )
-    ev.unionByName(ev_x).coalesce(1).write.parquet(f"{out}/events.parquet")
-    od.unionByName(od_x).coalesce(1).write.parquet(f"{out}/orders.parquet")
-    for t in TABLES:
-        if t not in ("events", "orders"):
-            spark.read.parquet(f"{SF}/{t}.parquet").write.parquet(f"{out}/{t}.parquet")
-    return out
+    changed = {
+        t: spark.read.parquet(f"{SF0001}/{t}.parquet").unionByName(x)
+        for t, x in (("events", ev_x), ("orders", od_x))
+    }
+    return out, write_corpus(spark, out, changed)
 
 
-@pytest.fixture(scope="module")
-def nasty_con(nasty_sf):
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{nasty_sf}/{t}.parquet/*.parquet'"
-        )
-    return c
-
-
-@pytest.mark.parametrize("name", TEMPORAL_QUERIES)
-def test_nasty_temporal_query_vs_oracle(spark, nasty_sf, nasty_con, name):
-    sdf = queries()[name](spark, nasty_sf).toPandas()
-    odf = nasty_con.execute(oracle_sql()[name]).df()
-    s, o = normalize(sdf), normalize(odf)
-    assert len(s) == len(o)
-    assert sorted(s.columns) == sorted(o.columns)
-    assert frame_hash(s) == frame_hash(o)
+def test_nasty_temporal_query_vs_oracle(spark, corpus, name):
+    assert_pair_matches(spark, *corpus, name)

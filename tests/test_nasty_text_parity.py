@@ -6,11 +6,12 @@ engine dialect edges — non-breaking/ideographic spaces (Java regex \\s vs
 RE2 \\s), RTL runs, combining marks vs precomposed, zero-width joiners,
 dotless-i casing (locale-sensitive lower()), lone surrogates avoided but
 astral-plane emoji included, control characters, single huge tokens, and
-leading/trailing whitespace. Every oracled text query must keep
-hash-parity when twenty-one such documents are appended to the sf0.001
-corpus — a divergence here is a dialect bug the ASCII gate cannot see.
-A second batch adds BOM/ZWNBSP, NEL, U+2028/29 separators, soft hyphens,
-fi/fl/st ligatures, fullwidth digits, titlecase Dž, and sharp s.
+leading/trailing whitespace. Every oracled query whose Spark plan reads
+documents (derived from its read set, ``registry`` in tests/conftest.py)
+must keep hash-parity when twenty-one such documents are appended to the
+sf0.001 corpus — a divergence here is a dialect bug the ASCII gate cannot
+see. A second batch adds BOM/ZWNBSP, NEL, U+2028/29 separators, soft
+hyphens, fi/fl/st ligatures, fullwidth digits, titlecase Dž, and sharp s.
 
 Codepoints are written as explicit escapes so no editor/tooling pass can
 silently normalize them.
@@ -18,13 +19,11 @@ silently normalize them.
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
-from __spark_entry__ import oracle_sql, queries
-from dq.io import TABLES
-from tests.test_null_text_parity import TEXT_QUERIES
-from tools.compare_oracle import frame_hash, normalize
+from tests.conftest import SF0001, assert_pair_matches, write_corpus
 
-SF = "/root/testdata/sf0.001"
+PARITY_CORPUS = "nasty_text"
 
 NASTY_TEXTS = [
     "café résumé naïve accents",
@@ -55,44 +54,21 @@ NASTY_TEXTS = [
 
 
 @pytest.fixture(scope="module")
-def nasty_sf(spark, tmp_path_factory):
+def corpus(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("nastytext"))
-    base = spark.read.parquet(f"{SF}/documents.parquet")
-    rows = [
-        (10_000_000 + i, t, "und", "srcN", len(t))
-        for i, t in enumerate(NASTY_TEXTS)
-    ]
     extra = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
+        [(10_000_000 + i, t, "und", "srcN", len(t)) for i, t in enumerate(NASTY_TEXTS)],
+        "doc_id long, text string, lang string, source string, n_chars long",
     )
-    base.unionByName(extra).coalesce(1).write.parquet(f"{out}/documents.parquet")
-    for t in TABLES:
-        if t != "documents":
-            spark.read.parquet(f"{SF}/{t}.parquet").write.parquet(f"{out}/{t}.parquet")
-    return out
+    docs = spark.read.parquet(f"{SF0001}/documents.parquet").unionByName(extra)
+    return out, write_corpus(spark, out, {"documents": docs})
 
 
-@pytest.fixture(scope="module")
-def nasty_con(nasty_sf):
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{nasty_sf}/{t}.parquet/*.parquet'"
-        )
-    return c
+def test_nasty_text_query_vs_oracle(spark, corpus, name):
+    assert_pair_matches(spark, *corpus, name)
 
 
-@pytest.mark.parametrize("name", TEXT_QUERIES)
-def test_nasty_text_query_vs_oracle(spark, nasty_sf, nasty_con, name):
-    sdf = queries()[name](spark, nasty_sf).toPandas()
-    odf = nasty_con.execute(oracle_sql()[name]).df()
-    s, o = normalize(sdf), normalize(odf)
-    assert len(s) == len(o)
-    assert sorted(s.columns) == sorted(o.columns)
-    assert frame_hash(s) == frame_hash(o)
-
-
-def test_pinned_divergence_turkish_capital_dotted_i(spark, nasty_con):
+def test_pinned_divergence_turkish_capital_dotted_i(spark):
     """DOCUMENTED engine-dialect boundary, pinned so a silent change in
     either engine surfaces: Spark lowercases U+0130 (İ) with the Unicode
     FULL case mapping ('i' + U+0307 combining dot), DuckDB with the SIMPLE
@@ -100,15 +76,13 @@ def test_pinned_divergence_turkish_capital_dotted_i(spark, nasty_con):
     through lower() — the corpus contract (and the reference's pipelines)
     is casefold-insensitive to this codepoint. If this test fails, the
     engines converged and the corpus exclusion above can be lifted."""
-    from pyspark.sql import functions as F
-
     s = (
         spark.createDataFrame([("İ",)], "t string")
         .select(F.lower("t").alias("l"))
         .collect()[0]
         .l
     )
-    d = nasty_con.execute("SELECT lower('İ')").fetchone()[0]
+    d = duckdb.connect().execute("SELECT lower('İ')").fetchone()[0]
     assert s == "i̇"
     assert d == "i"
     assert s != d

@@ -1027,3 +1027,16 @@ def test_registry_sweep_no_row_python_no_cartesian(registry):
         if bad:
             offenders[name] = bad
     assert offenders == {}, f"forbidden plan nodes: {offenders}"
+
+
+def test_membership_is_derived_from_read_sets(registry):
+    """The adversarial parity suites run the oracled queries whose read set
+    meets their corpus. A change in Spark's plan text that blinds the
+    read-set parser would drop every pair silently; this fails instead."""
+    from tests.conftest import CORPUS_CHANGES, meets
+
+    assert [n for n, b in registry.items() if not b.reads] == []
+    assert meets(registry["heuristic_metrics"].reads, "null_text")
+    assert meets(registry["qualitativo_price_bands"].reads, "nasty_numeric")
+    assert meets(registry["retention_cohorts"].reads, "nasty_temporal")
+    assert not any(meets(registry["kmeans_clusters"].reads, c) for c in CORPUS_CHANGES)
